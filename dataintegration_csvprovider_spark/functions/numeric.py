@@ -121,25 +121,3 @@ def render_number(
         rendered = F.translate(rendered, ".", dec)
     return rendered
 
-
-def format_decimal(
-    col: Column, decimal_separator: str = ".", grouping: bool = False
-) -> Column:
-    """T6 — locale-aware numeric render on write: the reference formats
-    scripted decimal/double/float values with the job culture
-    (ValueFormatter.GetFormattedValue, CSVDestinationWriter.cs:103-107;
-    culture resolution CSVProvider.cs:618-629). The engine renders
-    deterministically from explicit options instead of host culture:
-    invariant '.' by default, ',' for comma-decimal locales, optional
-    thousands grouping."""
-    if grouping:
-        # format_number renders 1,234.57-style with 2 decimals
-        rendered = F.format_number(col.cast("double"), 2)
-        if decimal_separator == ",":
-            # swap separators: 1,234.57 -> 1.234,57
-            rendered = F.translate(rendered, ",.", ".,")
-        return rendered
-    rendered = col.cast("double").cast("string")
-    if decimal_separator == ",":
-        rendered = F.translate(rendered, ".", ",")
-    return rendered

@@ -10,7 +10,7 @@ def scrub_newlines(col: Column) -> Column:
     """Strip embedded CR/LF — the reference removes every newline from the
     serialized row, flattening multi-line field values
     (CSVDestinationWriter.cs:89)."""
-    return F.regexp_replace(col, "\r\n|\r|\n", "")
+    return F.translate(col, "\r\n", "")
 
 
 def csv_quote(col: Column, quote: str = '"', null_sentinel: str = "NULL") -> Column:

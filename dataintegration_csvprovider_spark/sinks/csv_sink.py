@@ -15,22 +15,18 @@ Reference contract (CSVDestinationWriter.cs):
 Spark's CSV writer can't express "quote everything except the null
 sentinel" (quoteAll quotes the sentinel too — verified empirically), so
 fidelity mode serializes rows itself: per-column ``csv_quote`` expressions
-concat-joined JVM-side, written through the text source, then a driver-side
-commit-rename produces the exactly-named single file (header prepended,
-re-encoded if needed).
+concat-joined JVM-side, written in parallel through the text source, then
+committed by :func:`~.staged.write_staged`.
 
-Scale: ``single_file=True`` implies coalesce(1) — the fidelity mode for
-connector parity. At 100 TB use ``single_file=False``: a parallel
-directory write (one part per task) with identical row bytes; downstream
-consumers glob the directory.
+``single_file=True`` gives the reference's one exactly-named file (header
+prepended, encoded as configured), streamed from the part files in
+partition order. ``single_file=False`` keeps the parts as a directory
+with identical row bytes (UTF-8) for downstream consumers to glob.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import glob
-import os
-import shutil
 from dataclasses import dataclass, field, asdict
 
 from pyspark.sql import DataFrame
@@ -38,14 +34,8 @@ from pyspark.sql import functions as F
 
 from ..functions.numeric import render_number
 from ..functions.text import csv_quote
-
-#: reference encoding map (CSVProvider.cs:603-616)
-ENCODINGS = {
-    "UTF-8": "utf-8",
-    "UTF-16": "utf-16",
-    "Windows-1252": "cp1252",
-    "Windows-1251": "cp1251",
-}
+from ..sources.csv_source import ENCODINGS
+from .staged import write_staged
 
 
 @dataclass
@@ -128,37 +118,15 @@ class CsvSink:
     ) -> str:
         """Write ``df`` as CSV for destination ``table``; returns the final
         path (file in single-file mode, directory otherwise)."""
-        os.makedirs(self.folder, exist_ok=True)  # CSVDestinationWriter.cs:61-62
-        out = self._serialized(df)
-        staging = os.path.join(self.folder, f"_staging_{table}")
-        if single_file:
-            out = out.coalesce(1)
-        out.write.mode("overwrite").text(staging)
-
-        if not single_file:
-            final_dir = os.path.join(self.folder, self._target_name(table, timestamp))
-            if self.options.first_row_contains_column_names:
-                with open(os.path.join(staging, "_header.csv"), "w") as fh:
-                    fh.write(self._header_line(df.columns) + "\n")
-            if os.path.isdir(final_dir):
-                shutil.rmtree(final_dir)
-            os.replace(staging, final_dir)
-            return final_dir
-
-        # single-file commit: header + re-encode + exact rename
-        part = sorted(glob.glob(os.path.join(staging, "part-*")))
-        body = b""
-        for p in part:
-            with open(p, "rb") as fh:
-                body += fh.read()
-        text = body.decode("utf-8")
-        if self.options.first_row_contains_column_names:  # K2
-            text = self._header_line(df.columns) + "\n" + text
-        enc = ENCODINGS.get(self.options.encoding, self.options.encoding)
-        final = os.path.join(self.folder, self._target_name(table, timestamp))
-        tmp = final + ".tmp"
-        with open(tmp, "w", encoding=enc, newline="\n") as fh:
-            fh.write(text)
-        os.replace(tmp, final)  # atomic commit-rename
-        shutil.rmtree(staging, ignore_errors=True)
-        return final
+        o = self.options
+        header = None
+        if o.first_row_contains_column_names:  # K2
+            header = self._header_line(df.columns)
+        return write_staged(  # creates the folder (CSVDestinationWriter.cs:61-62)
+            self._serialized(df),
+            self.folder,
+            self._target_name(table, timestamp),
+            single_file,
+            header=header,
+            encoding=ENCODINGS.get(o.encoding, o.encoding),
+        )

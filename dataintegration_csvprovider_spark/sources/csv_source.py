@@ -33,6 +33,7 @@ parquet natively).
 from __future__ import annotations
 
 import csv
+import logging
 import os
 import time
 from dataclasses import dataclass, field, asdict
@@ -41,7 +42,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-#: reference encoding surface (CSVProvider.cs:603-616)
+#: reference encoding surface (CSVProvider.cs:603-616), shared by source
+#: and sink; the Java charset names are also Python codec names
 ENCODINGS = {
     "UTF-8": "UTF-8",
     "UTF-16": "UTF-16",
@@ -50,6 +52,8 @@ ENCODINGS = {
 }
 
 NULL_SENTINEL = "NULL"
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -264,7 +268,7 @@ class CsvSource:
             except DuplicateHeaderError:
                 raise
             except Exception as e:  # noqa: BLE001 — E4 semantics
-                print(f"warning: dropping table {table} from schema: {e}")
+                log.warning("dropping table %s from schema: %s", table, e)
         return schemas
 
     def _infer_table(self, spark: SparkSession, table: str) -> T.StructType:
@@ -384,5 +388,5 @@ class CsvSource:
                 os.remove(f)
                 deleted.append(f)
             except OSError as e:  # per-file try (CSVProvider.cs:663-668)
-                print(f"warning: could not delete {f}: {e}")
+                log.warning("could not delete %s: %s", f, e)
         return deleted

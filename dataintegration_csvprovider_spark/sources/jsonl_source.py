@@ -15,21 +15,24 @@ source with the same semantics slots as the CSV layer:
 
 Scale: the JSON datasource is splittable per line, predicate/column
 pruning reaches the scan, and a supplied schema avoids the inference
-pass — at 100 TB always pass ``schema``. The sink's fidelity mode
-(``single_file=True``) is for connector parity; the parallel directory
-write is the scale path.
+pass — at 100 TB always pass ``schema``. The sink writes in parallel and
+commits through the staged commit it shares with the CSV sink: ``single_file=True`` joins
+the parts in partition order into ``{table}.jsonl``; ``single_file=False``
+keeps them as the ``{table}.jsonl.d`` directory.
 """
 
 from __future__ import annotations
 
 import glob
 import os
-import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..sinks.staged import write_staged
+
 
 @dataclass
 class JsonlSource:
@@ -92,22 +95,8 @@ class JsonlSink:
     folder: str
 
     def write(self, df: DataFrame, table: str, single_file: bool = True) -> str:
-        os.makedirs(self.folder, exist_ok=True)
         out = df.select(
             F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value")
         )
-        staging = os.path.join(self.folder, f"_staging_{table}")
-        if single_file:
-            out = out.coalesce(1)
-        out.write.mode("overwrite").text(staging)
-        if not single_file:
-            final = os.path.join(self.folder, f"{table}.jsonl.d")
-            if os.path.exists(final):
-                shutil.rmtree(final)
-            os.rename(staging, final)
-            return final
-        final = os.path.join(self.folder, f"{table}.jsonl")
-        part = glob.glob(os.path.join(staging, "part-*"))[0]
-        shutil.move(part, final)
-        shutil.rmtree(staging)
-        return final
+        name = f"{table}.jsonl" if single_file else f"{table}.jsonl.d"
+        return write_staged(out, self.folder, name, single_file)

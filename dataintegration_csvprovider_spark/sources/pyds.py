@@ -113,93 +113,3 @@ class SequenceStreamDataSource(DataSource):
 
 def register_stream(spark) -> None:
     spark.dataSource.register(SequenceStreamDataSource)
-
-
-from dataclasses import dataclass  # noqa: E402
-
-from pyspark.sql.datasource import (  # noqa: E402
-    DataSourceWriter,
-    WriterCommitMessage,
-)
-
-
-@dataclass
-class _PartFile(WriterCommitMessage):
-    path: str
-    count: int
-
-
-class ManifestCsvWriter(DataSourceWriter):
-    """Distributed write with a driver-side atomic commit: each task
-    serializes its partition to ``part-<uuid>.csv`` (reference CSV
-    dialect: ; delimiter, quoted values, NULL sentinel) and returns a
-    commit message; only ``commit`` — which runs once, after every task
-    succeeded — publishes the manifest listing the part files and their
-    row counts. Readers that resolve files through the manifest never
-    see a partial write: the task files are invisible until the single
-    manifest rename. ``abort`` leaves no manifest, so a failed job is
-    indistinguishable from no job — the same two-phase contract as
-    Spark's file commit protocol, expressed in the Python writer API."""
-
-    def __init__(self, options) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("seqsink requires option('path', ...)")
-
-    def write(self, iterator) -> _PartFile:
-        import os
-        import uuid
-
-        os.makedirs(self.path, exist_ok=True)
-        part = os.path.join(self.path, f"part-{uuid.uuid4().hex}.csv")
-
-        def cell(v) -> str:
-            if v is None:
-                return "NULL"  # unquoted sentinel (CSVDestinationWriter.cs:129-131)
-            s = str(v).replace('"', '""')
-            return f'"{s}"'
-
-        n = 0
-        with open(part, "w", newline="\n", encoding="utf-8") as fh:
-            for row in iterator:
-                fh.write(";".join(cell(v) for v in row) + "\n")
-                n += 1
-        return _PartFile(path=part, count=n)
-
-    def commit(self, messages) -> None:
-        import json
-        import os
-
-        manifest = {
-            "parts": [
-                {"path": os.path.basename(m.path), "count": m.count}
-                for m in messages
-            ],
-            "total": sum(m.count for m in messages),
-        }
-        tmp = os.path.join(self.path, "_manifest.tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(manifest, fh, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path, "_manifest.json"))
-
-    def abort(self, messages) -> None:
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.path):
-                os.remove(m.path)
-
-
-class ManifestCsvDataSource(DataSource):
-    """``df.write.format("seqsink").option("path", ...)``"""
-
-    @classmethod
-    def name(cls) -> str:
-        return "seqsink"
-
-    def writer(self, schema, overwrite: bool) -> ManifestCsvWriter:
-        return ManifestCsvWriter(self.options)
-
-
-def register_sink(spark) -> None:
-    spark.dataSource.register(ManifestCsvDataSource)

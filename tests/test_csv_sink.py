@@ -2,8 +2,15 @@
 
 from __future__ import annotations
 
+import codecs
 import datetime as dt
+import os
 
+from dataintegration_csvprovider_spark.jobs import JobSpec, run_job
+from dataintegration_csvprovider_spark.plans.mapping_compiler import (
+    ColumnMapping,
+    Mapping,
+)
 from dataintegration_csvprovider_spark.sinks.csv_sink import CsvSink, CsvSinkOptions
 from dataintegration_csvprovider_spark.sources.csv_source import (
     CsvSource,
@@ -23,10 +30,15 @@ def test_quoting_and_null_sentinel(spark, tmp_path):
 
 def test_newline_scrub(spark, tmp_path):
     # T7: embedded newlines stripped from written rows (CSVDestinationWriter.cs:89)
-    df = spark.createDataFrame([("a\nb\r\nc",)], "x string")
+    df = spark.createDataFrame(
+        [(0, "a\nb\r\nc"), (1, "d\re"), (2, "f\ng")], "i int, x string"
+    ).orderBy("i")
     sink = CsvSink(folder=str(tmp_path))
     path = sink.write(df, "out")
-    assert open(path).read().splitlines()[1] == '"abc"'
+    with open(path, newline="") as fh:
+        assert fh.read().split("\n")[1:] == [
+            '"0";"abc"', '"1";"de"', '"2";"fg"', ""
+        ]
 
 
 def test_quote_escaping_divergence(spark, tmp_path):
@@ -76,6 +88,73 @@ def test_encoding_utf16_roundtrip(spark, tmp_path):
     path = sink.write(df, "out")
     text = open(path, encoding="utf-16").read()
     assert '"café"' in text
+    # parts from several partitions are re-encoded as one stream: the
+    # file starts with the only BOM (the utf-16 decoder consumes it)
+    many = spark.createDataFrame(
+        [(f"café{i}",) for i in range(40)], "x string"
+    ).repartition(4)
+    path = sink.write(many, "many")
+    raw = open(path, "rb").read()
+    assert raw.startswith((codecs.BOM_UTF16_LE, codecs.BOM_UTF16_BE))
+    text = raw.decode("utf-16")
+    assert "\ufeff" not in text
+    assert sorted(text.splitlines()[1:]) == sorted(f'"café{i}"' for i in range(40))
+
+
+def test_single_file_keeps_partition_order(spark, tmp_path):
+    # parts are written in parallel and joined in partition order — the
+    # order a coalesce(1) would have produced
+    df = spark.range(0, 1000, numPartitions=4)
+    path = CsvSink(folder=str(tmp_path)).write(df, "ids")
+    lines = open(path).read().splitlines()
+    assert lines == ['"id"'] + [f'"{i}"' for i in range(1000)]
+
+
+def test_parts_ordered_by_numeric_task_index(tmp_path):
+    # Spark's %05d task index widens past 99,999; name order would put
+    # part-100000 before part-99999
+    from dataintegration_csvprovider_spark.sinks.staged import _parts_in_order
+
+    names = ["part-100000-u-c000.txt", "part-99999-u-c001.txt",
+             "part-99999-u-c000.txt", "_SUCCESS", ".part-00000-u-c000.txt.crc"]
+    for n in names:
+        (tmp_path / n).write_text("")
+    assert [os.path.basename(p) for p in _parts_in_order(str(tmp_path))] == [
+        "part-99999-u-c000.txt", "part-99999-u-c001.txt", "part-100000-u-c000.txt"
+    ]
+
+
+def test_empty_result_is_header_only(spark, tmp_path):
+    df = spark.createDataFrame([], "x string, y int")
+    path = CsvSink(folder=str(tmp_path)).write(df, "empty")
+    assert open(path).read() == '"x";"y"\n'
+
+
+def test_failed_write_leaves_no_staging(spark, tmp_path):
+    # a FAILFAST source with a defective row fails the sink's Spark job;
+    # neither the staging directory nor a temp file may survive it
+    srcdir = tmp_path / "in"
+    srcdir.mkdir()
+    (srcdir / "t.csv").write_text("a;b\n1;2\n3;4;5\n")
+    out = tmp_path / "out"
+    job = JobSpec(
+        source=CsvSource(folder=str(srcdir)),
+        destination=CsvSink(folder=str(out)),
+        mappings=[
+            Mapping(
+                source_table="t",
+                column_mappings=[
+                    ColumnMapping(source_column="a"),
+                    ColumnMapping(source_column="b"),
+                ],
+            )
+        ],
+    )
+    res = run_job(spark, job)
+    assert not res.success and res.errors
+    left = os.listdir(out) if out.exists() else []
+    assert [n for n in left if n.startswith("_staging_") or n.endswith(".tmp")] == []
+    assert "t.csv" not in left
 
 
 def test_multi_part_scale_mode(spark, tmp_path):

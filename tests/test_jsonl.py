@@ -65,6 +65,14 @@ def test_directory_write_mode(spark, sf_dir, tmp_path):
     assert back.count() == sample.count()
 
 
+def test_empty_write_gives_empty_file(spark, sf_dir, tmp_path):
+    empty = _sample(spark, sf_dir).limit(0)
+    path = JsonlSink(folder=str(tmp_path)).write(empty, "docs")
+    assert path.endswith("docs.jsonl")
+    assert os.path.getsize(path) == 0
+    assert os.listdir(tmp_path) == ["docs.jsonl"]
+
+
 def test_tables_listing(spark, sf_dir, tmp_path):
     sample = _sample(spark, sf_dir)
     sink = JsonlSink(folder=str(tmp_path))

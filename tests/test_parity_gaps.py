@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dataintegration_csvprovider_spark.functions.numeric import format_decimal
+from dataintegration_csvprovider_spark.functions.numeric import render_number
 from dataintegration_csvprovider_spark.plans.mapping_compiler import (
     ColumnMapping,
     Mapping,
@@ -37,9 +37,9 @@ def test_format_decimal_renders(spark):
     # CSVDestinationWriter.cs:103-107)
     df = spark.createDataFrame([(1234.56,), (0.5,)], "v double")
     out = df.select(
-        format_decimal(F.col("v")).alias("inv"),
-        format_decimal(F.col("v"), ",").alias("de"),
-        format_decimal(F.col("v"), ",", grouping=True).alias("de_grp"),
+        render_number(F.col("v")).alias("inv"),
+        render_number(F.col("v"), culture="de-DE").alias("de"),
+        render_number(F.col("v"), culture="de-DE", grouping=True).alias("de_grp"),
     ).collect()
     assert (out[0].inv, out[0].de, out[0].de_grp) == (
         "1234.56", "1234,56", "1.234,56"

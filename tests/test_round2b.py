@@ -84,36 +84,3 @@ def test_doc_chunking_short_and_exact_docs(spark):
     )
     assert got == [(1, 0, 0, 30), (2, 0, 0, 200), (2, 1, 150, 200)]
 
-
-def test_manifest_csv_sink_commit_protocol(spark, tmp_path):
-    """Python DataSource writer: per-task part files + single manifest
-    commit; manifest totals equal the written row count."""
-    import json
-    import os
-
-    from dataintegration_csvprovider_spark.sources import pyds
-
-    pyds.register_sink(spark)
-    out = str(tmp_path / "sink")
-    df = spark.range(0, 1000).selectExpr(
-        "id", "CAST(id % 3 AS STRING) AS tag",
-        "CASE WHEN id % 10 = 0 THEN NULL ELSE 'v' END AS maybe"
-    ).repartition(4)
-    df.write.format("seqsink").option("path", out).mode("append").save()
-
-    manifest = json.load(open(os.path.join(out, "_manifest.json")))
-    assert manifest["total"] == 1000
-    assert len(manifest["parts"]) == 4
-    # every part file listed exists and the counts add up
-    per_file = 0
-    for p in manifest["parts"]:
-        path = os.path.join(out, p["path"])
-        with open(path, encoding="utf-8") as fh:
-            lines = fh.read().splitlines()
-        assert len(lines) == p["count"]
-        per_file += len(lines)
-    assert per_file == 1000
-    # NULL sentinel written unquoted (reference dialect)
-    some = open(os.path.join(out, manifest["parts"][0]["path"]),
-                encoding="utf-8").read()
-    assert ";NULL" in some or some.startswith("NULL")
