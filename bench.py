@@ -229,7 +229,7 @@ HEAVY = (
 #: so all core-count ratios read ~1 and the probe could not answer the
 #: question it exists for. This block times COMPUTE-DOMINATED jobs:
 #: each reads the same sf parquet inputs and blows them up in-memory by
-#: $SPARK_GRAFT_SCALE_MULT (default 16) deterministic key-offset
+#: $SPARK_GRAFT_SCALE_MULT (default 64) deterministic key-interleaved
 #: replicas INSIDE the timed region — no caching, no staged data, the
 #: replicate-explode is part of the measured plan — sizing the work to
 #: ~4-15 s at 32 cores so executor compute dominates the session
@@ -242,11 +242,13 @@ SCALE_MULT = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "64"))
 
 
 def _replicate(df, mult: int, key_cols: tuple = ()):
-    """Deterministic k-fold in-memory blowup: each replica offsets the
-    named key columns by 10M·k, preserving per-key row counts (join
-    fan-out and window partition sizes stay constant while the total
-    volume scales k-fold). Pure plan-side — computed fresh inside every
-    timed run.
+    """Deterministic k-fold in-memory blowup: replica r maps each named
+    key column to ``key*mult + r``, which is injective for integer keys
+    at any scale factor and preserves per-key row counts (join fan-out
+    and window partition sizes stay constant while the total volume
+    scales k-fold). Two frames replicated with the same ``mult`` keep
+    joining replica-to-replica. Pure plan-side — computed fresh inside
+    every timed run.
 
     The base is first repartitioned to defaultParallelism: the sf0.1
     fixture files are single-split (< maxPartitionBytes), so without it
@@ -267,7 +269,7 @@ def _replicate(df, mult: int, key_cols: tuple = ()):
     )
     for c in key_cols:
         out = out.withColumn(
-            c, SF.col(c) + SF.col("__rep").cast("long") * SF.lit(10_000_000)
+            c, SF.col(c).cast("long") * SF.lit(mult) + SF.col("__rep").cast("long")
         )
     return out.drop("__rep")
 
@@ -293,7 +295,7 @@ def _scale_agg(spark, sf_dir):
 
 
 def _scale_join(spark, sf_dir):
-    """mult x lineitem JOIN mult x orders on the replica-offset orderkey
+    """mult x lineitem JOIN mult x orders on the replica-mapped orderkey
     (per-key fan-out constant), aggregated by priority: shuffle-join
     scaling — the path most sensitive to reduce-side parallelism."""
     from pyspark.sql import functions as SF
@@ -318,7 +320,7 @@ def _scale_join(spark, sf_dir):
 
 
 def _scale_window(spark, sf_dir):
-    """Per-user running exact sum over mult x events (replica-offset
+    """Per-user running exact sum over mult x events (replica-mapped
     user_id: mult x more window partitions of the original size) —
     sort+window scaling."""
     from pyspark.sql import Window

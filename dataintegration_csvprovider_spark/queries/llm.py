@@ -3966,7 +3966,8 @@ def _tfidf_blocked_prune_survivors(
     materialize O(cells) on the driver).
 
     Same mathematics as :func:`_tfidf_dense_prune_survivors` — float64
-    block dots, exact float32 indicator-matmul shared-term counts, the
+    block dots, exact indicator-matmul shared-term counts (float32 below
+    a 2^24-term vocabulary, float64 from there), the
     identical per-pair keep bound — so the SAME soundness argument
     holds for any BLAS summation order (all products positive), and
     survivors feed the unchanged exact-decimal verification: outputs
@@ -4045,6 +4046,8 @@ def _tfidf_blocked_prune_survivors(
 
     def score(batches):
         ids_b, _, nrm_b, blk, n_b, v_b = bc.value
+        # the shared-term count is exact in float32 only below 2^24
+        ind = np.float32 if v_b < 1 << 24 else np.float64
         for pdf in batches:
             for bi, bj, ma, mb in zip(
                 pdf["bi"], pdf["bj"], pdf["ma"], pdf["mb"]
@@ -4055,8 +4058,7 @@ def _tfidf_blocked_prune_survivors(
                 rb = slice(bj * blk, bj * blk + B.shape[0])
                 dot = A @ B.T
                 nt = (
-                    (A != 0.0).astype(np.float32)
-                    @ (B != 0.0).astype(np.float32).T
+                    (A != 0.0).astype(ind) @ (B != 0.0).astype(ind).T
                 ).astype(np.float64)
                 nanb = nrm_b[ra][:, None] * nrm_b[rb][None, :]
                 keep = (

@@ -526,6 +526,39 @@ _CMS_P = 2147483647  # 2^31 - 1, prime
 _CMS_W = 64
 _CMS_ROWS = ((2654435761, 1), (2246822519, 7), (3266489917, 31),
              (668265263, 127))
+#: the sketch rows as (row index, multiplier, offset)
+_CMS_SEEDS = tuple((i, a, b) for i, (a, b) in enumerate(_CMS_ROWS))
+
+
+def _cms_bucket(x, a: int, b: int):
+    """Count-min cell of ``x`` in one sketch row: ``((x*a + b) mod P) mod
+    W``. decimal(20,0) x decimal(10,0) keeps the multiply exact far past
+    the bigint-overflow point (same convention as negative_samples)."""
+    return F.pmod(
+        F.pmod(
+            x.cast("decimal(20,0)") * F.lit(a).cast("decimal(10,0)")
+            + F.lit(b).cast("decimal(10,0)"),
+            F.lit(_CMS_P).cast("decimal(20,0)"),
+        ).cast("bigint"),
+        F.lit(_CMS_W),
+    )
+
+
+def _cms_cells(df: DataFrame, *keep: str) -> DataFrame:
+    """One row per row of ``df`` and sketch row: the ``keep`` columns,
+    the sketch row ``i`` and the ``bucket`` its ``user_id`` hashes to."""
+    cells = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(i).alias("i"),
+                    _cms_bucket(F.col("user_id"), a, b).alias("bucket"),
+                )
+                for i, a, b in _CMS_SEEDS
+            ]
+        )
+    ).alias("h")
+    return df.select(*keep, cells).select(*keep, "h.i", "h.bucket")
 
 
 @register(
@@ -576,55 +609,15 @@ _CMS_ROWS = ((2654435761, 1), (2246822519, 7), (3266489917, 31),
 )
 def q_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("user_id")
-    seeds = [(i, a, b) for i, (a, b) in enumerate(_CMS_ROWS)]
-
-    def bucket(x, a: int, b: int):
-        # decimal(20,0) x decimal(10,0) keeps the multiply exact far past
-        # the bigint-overflow point (same convention as negative_samples)
-        return F.pmod(
-            F.pmod(
-                x.cast("decimal(20,0)") * F.lit(a).cast("decimal(10,0)")
-                + F.lit(b).cast("decimal(10,0)"),
-                F.lit(_CMS_P).cast("decimal(20,0)"),
-            ).cast("bigint"),
-            F.lit(_CMS_W),
-        )
-
-    hashed = ev.select(
-        "user_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("i"),
-                        bucket(F.col("user_id"), a, b).alias("bucket"),
-                    )
-                    for i, a, b in seeds
-                ]
-            )
-        ).alias("h"),
-    ).select("user_id", "h.i", "h.bucket")
-    sketch = hashed.groupBy("i", "bucket").agg(
+    sketch = _cms_cells(ev).groupBy("i", "bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
     truth = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("true_n")
     )
-    probes = truth.filter(F.col("user_id") < 50).select(
-        "user_id",
-        "true_n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("i"),
-                        bucket(F.col("user_id"), a, b).alias("bucket"),
-                    )
-                    for i, a, b in seeds
-                ]
-            )
-        ).alias("h"),
-    ).select("user_id", "true_n", "h.i", "h.bucket")
+    probes = _cms_cells(
+        truth.filter(F.col("user_id") < 50), "user_id", "true_n"
+    )
     est = (
         probes.join(F.broadcast(sketch), ["i", "bucket"])
         .groupBy("user_id", "true_n")

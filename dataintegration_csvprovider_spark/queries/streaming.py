@@ -22,6 +22,7 @@ from ..streaming.events import (
     stream_from_parquet,
     tumbling_agg,
 )
+from .profiling import _CMS_P, _CMS_SEEDS, _CMS_W, _cms_cells
 from .registry import dsum, dsum12, register, sql_dsum
 
 # r13 decimal-sum migration: per-window/per-session/per-segment event
@@ -1335,7 +1336,6 @@ def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..operators.sketches import rows_ledger_commit, rows_ledger_read
-    from .profiling import _CMS_P, _CMS_ROWS, _CMS_W
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_id")
     stage = tempfile.mkdtemp(prefix="cms_stage_")
@@ -1343,33 +1343,6 @@ def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger_root = tempfile.mkdtemp(prefix="cms_ledger_")
     ledger_dir = ledger_root + "/ledger"
     _CMS_LEDGER_SCHEMA = "i int, bucket bigint, c bigint"
-    seeds = [(i, a, b) for i, (a, b) in enumerate(_CMS_ROWS)]
-
-    def bucket(x, a: int, b: int):
-        return F.pmod(
-            F.pmod(
-                x.cast("decimal(20,0)") * F.lit(a).cast("decimal(10,0)")
-                + F.lit(b).cast("decimal(10,0)"),
-                F.lit(_CMS_P).cast("decimal(20,0)"),
-            ).cast("bigint"),
-            F.lit(_CMS_W),
-        )
-
-    def hashed(df: DataFrame) -> DataFrame:
-        return df.select(
-            "user_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("i"),
-                            bucket(F.col("user_id"), a, b).alias("bucket"),
-                        )
-                        for i, a, b in seeds
-                    ]
-                )
-            ).alias("h"),
-        ).select("h.i", "h.bucket")
 
     def write_slice(k: int, name: str, mtime: int) -> None:
         import os as _os
@@ -1412,7 +1385,7 @@ def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
             state = {(int(r["i"]), int(r["bucket"])): int(r["c"])
                      for r in prev}
             for r in (
-                hashed(bdf).groupBy("i", "bucket").count().collect()
+                _cms_cells(bdf).groupBy("i", "bucket").count().collect()
             ):
                 key = (int(r["i"]), int(r["bucket"]))
                 state[key] = state.get(key, 0) + int(r["count"])
@@ -1444,21 +1417,9 @@ def q_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("true_n")
     )
-    probes = truth.filter(F.col("user_id") < 50).select(
-        "user_id",
-        "true_n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("i"),
-                        bucket(F.col("user_id"), a, b).alias("bucket"),
-                    )
-                    for i, a, b in seeds
-                ]
-            )
-        ).alias("h"),
-    ).select("user_id", "true_n", "h.i", "h.bucket")
+    probes = _cms_cells(
+        truth.filter(F.col("user_id") < 50), "user_id", "true_n"
+    )
     est = (
         probes.join(F.broadcast(sketch), ["i", "bucket"])
         .groupBy("user_id", "true_n")
@@ -1533,39 +1494,11 @@ def q_stream_countmin_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from ..operators.sketches import rows_ledger_commit, rows_ledger_read
-    from .profiling import _CMS_P, _CMS_ROWS, _CMS_W
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_id")
     stage = tempfile.mkdtemp(prefix="cmsr_stage_")
     roots = [tempfile.mkdtemp(prefix="cmsr_run_") for _ in range(2)]
     schema_str = "i int, bucket bigint, c bigint"
-    seeds = [(i, a, b) for i, (a, b) in enumerate(_CMS_ROWS)]
-
-    def bucket(x, a: int, b: int):
-        return F.pmod(
-            F.pmod(
-                x.cast("decimal(20,0)") * F.lit(a).cast("decimal(10,0)")
-                + F.lit(b).cast("decimal(10,0)"),
-                F.lit(_CMS_P).cast("decimal(20,0)"),
-            ).cast("bigint"),
-            F.lit(_CMS_W),
-        )
-
-    def hashed(df: DataFrame) -> DataFrame:
-        return df.select(
-            "user_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("i"),
-                            bucket(F.col("user_id"), a, b).alias("bucket"),
-                        )
-                        for i, a, b in seeds
-                    ]
-                )
-            ).alias("h"),
-        ).select("h.i", "h.bucket")
 
     def write_slice(k: int, name: str, mtime: int) -> None:
         import os as _os
@@ -1602,7 +1535,7 @@ def q_stream_countmin_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             state = {(int(r["i"]), int(r["bucket"])): int(r["c"])
                      for r in prev}
             for r in (
-                hashed(bdf).groupBy("i", "bucket").count().collect()
+                _cms_cells(bdf).groupBy("i", "bucket").count().collect()
             ):
                 key = (int(r["i"]), int(r["bucket"]))
                 state[key] = state.get(key, 0) + int(r["count"])
@@ -1654,21 +1587,9 @@ def q_stream_countmin_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = ev.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("true_n")
     )
-    probes = truth.filter(F.col("user_id") < 50).select(
-        "user_id",
-        "true_n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("i"),
-                        bucket(F.col("user_id"), a, b).alias("bucket"),
-                    )
-                    for i, a, b in seeds
-                ]
-            )
-        ).alias("h"),
-    ).select("user_id", "true_n", "h.i", "h.bucket")
+    probes = _cms_cells(
+        truth.filter(F.col("user_id") < 50), "user_id", "true_n"
+    )
     est = (
         probes.join(F.broadcast(sketch), ["i", "bucket"])
         .groupBy("user_id", "true_n")
@@ -2492,35 +2413,8 @@ def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         sketch_ledger_apply,
         sketch_ledger_read,
     )
-    from .profiling import _CMS_P, _CMS_ROWS, _CMS_W
 
-    seeds = [(i, a, b) for i, (a, b) in enumerate(_CMS_ROWS)]
     cms_schema = "i int, bucket bigint, c bigint"
-
-    def bucket(x, a: int, b: int):
-        return F.pmod(
-            F.pmod(
-                x.cast("decimal(20,0)") * F.lit(a).cast("decimal(10,0)")
-                + F.lit(b).cast("decimal(10,0)"),
-                F.lit(_CMS_P).cast("decimal(20,0)"),
-            ).cast("bigint"),
-            F.lit(_CMS_W),
-        )
-
-    def cms_cells(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("i"),
-                            bucket(F.col("user_id"), a, b).alias("bucket"),
-                        )
-                        for i, a, b in seeds
-                    ]
-                )
-            ).alias("h")
-        ).select("h.i", "h.bucket")
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -2603,7 +2497,7 @@ def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 state = {(int(r["i"]), int(r["bucket"])): int(r["c"])
                          for r in prev}
                 for r in (
-                    cms_cells(bdf).groupBy("i", "bucket").count().collect()
+                    _cms_cells(bdf).groupBy("i", "bucket").count().collect()
                 ):
                     key = (int(r["i"]), int(r["bucket"]))
                     state[key] = state.get(key, 0) + int(r["count"])
@@ -2766,11 +2660,11 @@ def q_stream_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     for (i, _b), c in cms_state.items():
         row_sums[i] = row_sums.get(i, 0) + c
     cms_mass_ok = all(
-        row_sums.get(i, 0) == n_events for i in range(len(seeds))
+        row_sums.get(i, 0) == n_events for i in range(len(_CMS_SEEDS))
     )
     cms_est0 = min(
         cms_state.get((i, (0 * a + b) % _CMS_P % _CMS_W), 0)
-        for i, a, b in seeds
+        for i, a, b in _CMS_SEEDS
     )
 
     kmv_vals = [v for k_, v in finals["crash"]["kmv"][0] if k_ == "h"]

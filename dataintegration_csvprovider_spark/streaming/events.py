@@ -15,7 +15,10 @@ batch semantics for complete-mode aggs).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -192,10 +195,10 @@ def run_to_completion(
     plan so a zero-row result reads back as an empty frame instead of
     failing inference. COMPLETE mode keeps the memory sink: the file
     sink cannot express complete-mode re-emission, and complete-mode
-    results are bounded aggregates by construction."""
+    results are bounded aggregates by construction. The checkpoint
+    directory is removed once the query terminates; the sink directory
+    at interpreter exit, since the returned frame reads it lazily."""
     if output_mode == "append":
-        import tempfile
-
         # sink-width repartition (guide §6 — coalesce on write): without
         # it every state-store partition writes its own tiny file (33
         # files for ~95k session rows at sf0.1; commit + read-back
@@ -210,16 +213,23 @@ def run_to_completion(
         )
         out_dir = tempfile.mkdtemp(prefix="stream_sink_")
         ck_dir = tempfile.mkdtemp(prefix="stream_sink_ck_")
-        q = (
-            stream_df.repartition(k)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        try:
+            q = (
+                stream_df.repartition(k)
+                .writeStream.format("parquet")
+                .option("path", out_dir)
+                .option("checkpointLocation", ck_dir)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        except BaseException:
+            shutil.rmtree(out_dir, ignore_errors=True)
+            raise
+        finally:
+            shutil.rmtree(ck_dir, ignore_errors=True)
+        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
         return (
             stream_df.sparkSession.read.schema(stream_df.schema)
             .parquet(out_dir)

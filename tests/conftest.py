@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -7,6 +8,9 @@ import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+# the session factory keeps its class-data-sharing archive in the user
+# cache (see session.py); tests keep theirs in the checkout instead
+os.environ["XDG_CACHE_HOME"] = str(REPO / ".cache")
 
 from dataintegration_csvprovider_spark.session import get_spark  # noqa: E402
 

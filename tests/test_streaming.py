@@ -60,6 +60,22 @@ def test_dedup_within_watermark(spark, tmp_path):
     assert out.count() == n_pairs
 
 
+def test_append_run_removes_its_checkpoint_dir(spark, tmp_path, monkeypatch):
+    import tempfile
+
+    _, stream = _staged_stream(spark, tmp_path)
+    temp = tmp_path / "tmp"
+    temp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(temp))
+    out = run_to_completion(
+        dedup_within_watermark(stream, keys=("user_id", "event_type")), "append"
+    )
+    assert not list(temp.glob("stream_sink_ck_*"))
+    # the sink dir stays until exit: the returned frame reads it lazily
+    assert [p.name.startswith("stream_sink_") for p in temp.iterdir()] == [True]
+    assert out.count() > 0
+
+
 def test_stateful_user_totals_matches_batch(spark, tmp_path):
     from dataintegration_csvprovider_spark.streaming.events import (
         stateful_user_totals,
