@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .sqltext import sql_string
+
 #: .NET "dd-MM-yyyy HH:mm:ss:fff" → JVM pattern
 REFERENCE_DATETIME_FORMAT = "dd-MM-yyyy HH:mm:ss:SSS"
 
@@ -26,4 +28,13 @@ def format_reference_datetime(col: Column) -> Column:
     return F.coalesce(
         F.date_format(ts, REFERENCE_DATETIME_FORMAT),
         F.lit(DATETIME_MIN_SENTINEL),
+    )
+
+
+def format_reference_datetime_sql(expr: str) -> str:
+    """:func:`format_reference_datetime` as Spark SQL text over the SQL
+    ``expr``."""
+    return (
+        f"coalesce(date_format(try_cast({expr} AS TIMESTAMP), "
+        f"{sql_string(REFERENCE_DATETIME_FORMAT)}), {sql_string(DATETIME_MIN_SENTINEL)})"
     )

@@ -5,12 +5,21 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .sqltext import sql_string
+
+_NEWLINES = "\r\n"
+
 
 def scrub_newlines(col: Column) -> Column:
     """Strip embedded CR/LF — the reference removes every newline from the
     serialized row, flattening multi-line field values
     (CSVDestinationWriter.cs:89)."""
-    return F.translate(col, "\r\n", "")
+    return F.translate(col, _NEWLINES, "")
+
+
+def scrub_newlines_sql(expr: str) -> str:
+    """:func:`scrub_newlines` as Spark SQL text over the SQL ``expr``."""
+    return f"translate({expr}, {sql_string(_NEWLINES)}, '')"
 
 
 def csv_quote(col: Column, quote: str = '"', null_sentinel: str = "NULL") -> Column:
@@ -23,3 +32,13 @@ def csv_quote(col: Column, quote: str = '"', null_sentinel: str = "NULL") -> Col
     return F.when(
         col.isNull(), F.lit(null_sentinel)
     ).otherwise(F.concat(F.lit(quote), scrub_newlines(escaped), F.lit(quote)))
+
+
+def csv_quote_sql(expr: str, quote: str = '"', null_sentinel: str = "NULL") -> str:
+    """:func:`csv_quote` as Spark SQL text over the SQL ``expr``."""
+    q = sql_string(quote)
+    escaped = f"replace(CAST({expr} AS STRING), {q}, {sql_string(quote * 2)})"
+    return (
+        f"CASE WHEN ({expr}) IS NULL THEN {sql_string(null_sentinel)} "
+        f"ELSE concat({q}, {scrub_newlines_sql(escaped)}, {q}) END"
+    )

@@ -16,6 +16,8 @@ from dataclasses import dataclass, asdict
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_ident
+
 #: operator name -> predicate builder. Negative operators are null-SAFE
 #: (a NULL cell passes neq/not_contains/not_in): the reference compares
 #: CSV cell strings where "no value" is an empty string, never a SQL
@@ -52,7 +54,8 @@ class Conditional:
             raise ValueError(
                 f"unknown conditional operator {self.op!r}; valid: {sorted(_OPS)}"
             ) from None
-        return build(F.col(self.column), self.value)
+        # one literal name, resolved as the mapping's projection resolves it
+        return build(F.col(sql_ident(self.column)), self.value)
 
     def substituted(self, params: dict[str, object]) -> "Conditional":
         """Parameter substitution (CSVProvider.cs:545): a string value of

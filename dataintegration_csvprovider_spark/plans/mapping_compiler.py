@@ -7,10 +7,14 @@ CSVDestinationWriter.cs:86) → per-column transforms (constants/scripts
 CSVDestinationWriter.cs:95-115, value conversion :120,135, decimal
 normalization CSVSourceReader.cs:228-239, DateTime render :98-101).
 
-Here each ColumnMapping compiles to exactly one Column expression and the
-whole Mapping to ``filter`` + ``select`` — Catalyst then prunes the scan
-to mapped columns and pushes the filter down, giving at plan level what
-the reference did per-row.
+Here each ColumnMapping compiles to one Spark SQL select item and the
+whole Mapping to ``filter`` + one ``selectExpr``: the JVM parses the
+projection once, where building it through the Column API costs a py4j
+round trip per function call and operator. The SQL text comes from the
+``*_sql`` builders beside the public Column helpers in ``functions/``
+(the reference form, which the tests compare the builders against).
+Conditionals stay Column predicates. Catalyst pushes the filter down,
+giving at plan level what the reference did per-row.
 """
 
 from __future__ import annotations
@@ -18,10 +22,10 @@ from __future__ import annotations
 from dataclasses import dataclass, field, asdict
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
-from ..functions.datetimefmt import format_reference_datetime
-from ..functions.numeric import parse_double
+from ..functions.datetimefmt import format_reference_datetime_sql
+from ..functions.numeric import parse_double_sql
+from ..functions.sqltext import sql_ident, sql_literal
 from .conditionals import Conditional, apply_conditionals
 
 #: destination types with reference-specified conversion semantics
@@ -33,10 +37,15 @@ class ColumnMapping:
     """source column → destination column with optional constant/script
     and destination-type-driven conversion (SURVEY.md §1.1 ColumnMapping).
 
+    - ``source_column``/``destination_column``: one literal name each, as
+      the CSV header spells it; dots, spaces and backticks are part of
+      the name (a name written in backticks keeps them).
     - ``constant``: T4 — inject a fixed value instead of a source column
       (``ScriptType.Constant``, CSVDestinationWriter.cs:156-159).
     - ``script``: T4 — a Spark SQL expression string over source columns
-      (the engine's analog of the reference's script hooks).
+      (the engine's analog of the reference's script hooks); one
+      expression without an ``AS`` alias, since the destination column
+      names it.
     - ``dest_type``: drives T1/T2/T5 conversions — 'double'/'float' apply
       decimal-separator normalization (CSVSourceReader.cs:228-239);
       'datetime' renders the reference format (CSVDestinationWriter.cs:
@@ -50,32 +59,34 @@ class ColumnMapping:
     script: str | None = None
     dest_type: str | None = None
 
-    def to_expr(self, decimal_separator: str = "auto") -> Column:
+    def to_expr(self, decimal_separator: str = "auto") -> str:
+        """This column as one Spark SQL select item: ``<expr> AS <dst>``."""
         dst = self.destination_column or self.source_column
         if dst is None:
             raise ValueError("column mapping needs a destination or source name")
         if self.constant is not None:
-            col: Column = F.lit(self.constant)
+            expr = sql_literal(self.constant)
         elif self.script is not None:
-            col = F.expr(self.script)
+            # the newline ends a trailing -- comment inside the script
+            expr = f"({self.script}\n)"
         elif self.source_column is not None:
-            col = F.col(self.source_column)
+            expr = sql_ident(self.source_column)
         else:
             raise ValueError(f"mapping for {dst!r} has no source/constant/script")
 
         t = (self.dest_type or "").lower()
         if t in ("double", "float"):
             # T1/T2: locale decimal normalization before numeric cast
-            col = parse_double(col.cast("string"), decimal_separator)
+            expr = parse_double_sql(f"CAST({expr} AS STRING)", decimal_separator)
             if t == "float":
-                col = col.cast("float")
+                expr = f"CAST({expr} AS FLOAT)"
         elif t == "datetime":
-            col = format_reference_datetime(col)  # T5
+            expr = format_reference_datetime_sql(expr)  # T5
         elif t in _CASTABLE and t != "string":
-            col = col.try_cast(t)  # T3 value conversion; unparseable → NULL
+            expr = f"try_cast({expr} AS {t})"  # T3 value conversion; unparseable → NULL
         elif t == "string":
-            col = col.cast("string")
-        return col.alias(dst)
+            expr = f"CAST({expr} AS STRING)"
+        return f"{expr} AS {sql_ident(dst)}"
 
     def to_dict(self) -> dict:
         return asdict(self)
@@ -152,4 +163,4 @@ def compile_mapping(
             f"mapping {mapping.source_table} -> {mapping.dest_table} has no "
             "active column mappings"
         )
-    return out.select(*[m.to_expr(decimal_separator) for m in cms])
+    return out.selectExpr(*[m.to_expr(decimal_separator) for m in cms])

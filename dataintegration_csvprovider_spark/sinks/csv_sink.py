@@ -14,8 +14,10 @@ Reference contract (CSVDestinationWriter.cs):
 
 Spark's CSV writer can't express "quote everything except the null
 sentinel" (quoteAll quotes the sentinel too — verified empirically), so
-fidelity mode serializes rows itself: per-column ``csv_quote`` expressions
-concat-joined JVM-side, written in parallel through the text source, then
+fidelity mode serializes rows itself: one Spark SQL ``concat_ws`` over
+per-cell ``csv_quote_sql`` renders (the SQL text of ``csv_quote``, and of
+``render_number`` for numeric cells), handed to the JVM in one
+``selectExpr``, written in parallel through the text source, then
 committed by :func:`~.staged.write_staged`.
 
 ``single_file=True`` gives the reference's one exactly-named file (header
@@ -30,10 +32,11 @@ import datetime as dt
 from dataclasses import dataclass, field, asdict
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType, DoubleType, FloatType
 
-from ..functions.numeric import render_number
-from ..functions.text import csv_quote
+from ..functions.numeric import render_number_sql
+from ..functions.sqltext import sql_ident, sql_string
+from ..functions.text import csv_quote_sql
 from ..sources.csv_source import ENCODINGS
 from .staged import write_staged
 
@@ -74,25 +77,18 @@ class CsvSink:
         scrub, joined with the delimiter. concat_ws skips NULLs, so cells
         are rendered via csv_quote first (NULL → unquoted sentinel).
         Float/double/decimal columns render through the job culture (T6)
-        — a no-op translate for '.'-decimal cultures."""
+        — a no-op translate for '.'-decimal cultures. The whole render
+        is one Spark SQL expression."""
         o = self.options
-        numeric = {
-            f.name
-            for f in df.schema.fields
-            if f.dataType.simpleString() in ("double", "float")
-            or f.dataType.simpleString().startswith("decimal")
-        }
-        cells = [
-            csv_quote(
-                render_number(F.col(c), culture=o.culture)
-                if c in numeric
-                else F.col(c),
-                quote=o.quote,
-                null_sentinel=o.null_sentinel,
-            )
-            for c in df.columns
-        ]
-        return df.select(F.concat_ws(o.delimiter, *cells).alias("value"))
+        cells = []
+        for f in df.schema.fields:
+            cell = sql_ident(f.name)
+            if isinstance(f.dataType, (DoubleType, FloatType, DecimalType)):
+                cell = render_number_sql(cell, culture=o.culture)
+            cells.append(csv_quote_sql(cell, quote=o.quote, null_sentinel=o.null_sentinel))
+        return df.selectExpr(
+            f"concat_ws({sql_string(o.delimiter)}, {', '.join(cells)}) AS value"
+        )
 
     def _header_line(self, columns: list[str]) -> str:
         o = self.options

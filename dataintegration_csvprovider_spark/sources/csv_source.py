@@ -25,9 +25,11 @@ on Spark's CSV DataSource:
 Scale notes: the Spark CSV scan is file-split parallel; ``multi_line``
 (quoted embedded newlines, the reference parser's default behavior) makes
 files non-splittable, so it defaults off and is an explicit fidelity knob.
-Column pruning/predicate prune happen post-parse for CSV — at 100 TB
-convert to parquet once, then run queries (the engine's catalog reads
-parquet natively).
+The scan parses every column of a row (the reader's ``columnPruning``
+option is off), so a defective row is judged by its whole field count
+whatever columns a mapping selects; predicates apply post-parse — at
+100 TB convert to parquet once, then run queries (the engine's catalog
+reads parquet natively).
 """
 
 from __future__ import annotations
@@ -93,6 +95,10 @@ class CsvSourceOptions:
             "multiLine": str(multi_line).lower(),
             "mode": mode,
             "enforceSchema": "false",
+            # a row's field count is checked only over the parsed
+            # columns; parse them all so a mapping that selects a few
+            # still skips or fails on every defective row (E1/E2)
+            "columnPruning": "false",
         }
 
     def to_dict(self) -> dict:

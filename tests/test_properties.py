@@ -6,13 +6,17 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from dataintegration_csvprovider_spark.operators.dedup import (
     minhash_near_dup_pairs,
 )
 from dataintegration_csvprovider_spark.sinks.csv_sink import CsvSink
-from dataintegration_csvprovider_spark.sources.csv_source import CsvSource
+from dataintegration_csvprovider_spark.sources.csv_source import (
+    CsvSource,
+    CsvSourceOptions,
+)
 
 # cells: printable text without the quote-ambiguous edge the reference
 # itself cannot round-trip (its parser trims whitespace at scan — leading/
@@ -46,6 +50,54 @@ def test_csv_roundtrip_property(spark_prop, tmp_path_factory, rows):
     got = sorted(tuple(norm(x) for x in r) for r in back)
     want = sorted(tuple(norm(x) for x in r) for r in rows)
     assert got == want
+
+
+@st.composite
+def _defective_table(draw):
+    """(column count, data rows, selected column indexes): rows with
+    every field, and rows with too few or too many fields at random
+    positions."""
+    ncols = draw(st.integers(2, 5))
+    good = [[f"r{i}c{c}" for c in range(ncols)] for i in range(draw(st.integers(1, 6)))]
+    bad = [
+        [f"b{i}c{c}" for c in range(n)]
+        for i, n in enumerate(
+            draw(
+                st.lists(
+                    st.one_of(st.integers(1, ncols - 1), st.integers(ncols + 1, ncols + 2)),
+                    max_size=3,
+                )
+            )
+        )
+    ]
+    rows = good[:]
+    for row in bad:
+        rows.insert(draw(st.integers(0, len(rows))), row)
+    cols = draw(st.lists(st.integers(0, ncols - 1), min_size=1, max_size=ncols, unique=True))
+    return ncols, rows, cols
+
+
+@settings(max_examples=25, deadline=None)
+@given(_defective_table(), st.booleans())
+def test_defective_rows_judged_by_whole_row(spark_prop, tmp_path_factory, table, skip):
+    """Whatever columns a read selects, a row with the wrong field count
+    is dropped (ignore_defective_rows) or fails the read — the reference
+    parses whole records (CSVSourceReader.cs:53-56,64-68)."""
+    ncols, rows, cols = table
+    d = tmp_path_factory.mktemp("defects")
+    lines = [[f"c{c}" for c in range(ncols)]] + rows
+    (d / "t.csv").write_text("".join(";".join(r) + "\n" for r in lines))
+    names = [f"c{c}" for c in cols]
+    df = CsvSource(
+        folder=str(d), options=CsvSourceOptions(ignore_defective_rows=skip)
+    ).read(spark_prop, "t").select(*names)
+    good = [tuple(r[c] for c in cols) for r in rows if len(r) == ncols]
+    if skip or len(good) == len(rows):
+        assert [tuple(r) for r in df.collect()] == good
+        assert df.count() == len(good)
+    else:
+        with pytest.raises(Exception, match="MALFORMED"):
+            df.collect()
 
 
 @settings(max_examples=6, deadline=None)
