@@ -21,9 +21,6 @@ from .sqltext import sql_string
 #: accepted decimal-separator modes (CSVProvider.cs:719-727)
 DECIMAL_MODES = ("auto", ".", ",")
 
-#: a literal '.' as a regex, as SQL text (a class, so no backslash)
-_DOT_REGEX = "'[.]'"
-
 
 def normalize_decimal(col: Column, mode: str = "auto") -> Column:
     """Return ``col`` (a string column) normalized to a '.'-decimal string
@@ -37,19 +34,19 @@ def normalize_decimal(col: Column, mode: str = "auto") -> Column:
       if both separators occur, the right-most one is the decimal point;
       a single ',' is a decimal point (e.g. '1,5' → 1.5); '.' is kept.
     """
-    if mode == ".":
-        return F.regexp_replace(col, ",", "")
-    if mode == ",":
-        return F.regexp_replace(F.regexp_replace(col, "\\.", ""), ",", ".")
-    if mode != "auto":
+    if mode not in DECIMAL_MODES:
         raise ValueError(f"decimal separator mode must be one of {DECIMAL_MODES}")
-
+    # literal patterns, so ``replace`` (a byte search), not a regex
+    as_dot_decimal = F.replace(col, F.lit(","), F.lit(""))
+    as_comma_decimal = F.replace(F.replace(col, F.lit("."), F.lit("")), F.lit(","), F.lit("."))
+    if mode == ".":
+        return as_dot_decimal
+    if mode == ",":
+        return as_comma_decimal
     dot = F.instr(col, ".")
     comma = F.instr(col, ",")
     last_dot = F.length(col) - F.instr(F.reverse(col), ".")
     last_comma = F.length(col) - F.instr(F.reverse(col), ",")
-    as_dot_decimal = F.regexp_replace(col, ",", "")
-    as_comma_decimal = F.regexp_replace(F.regexp_replace(col, "\\.", ""), ",", ".")
     return (
         F.when((dot > 0) & (comma > 0),
                F.when(last_dot > last_comma, as_dot_decimal)
@@ -61,8 +58,8 @@ def normalize_decimal(col: Column, mode: str = "auto") -> Column:
 
 def normalize_decimal_sql(expr: str, mode: str = "auto") -> str:
     """:func:`normalize_decimal` as Spark SQL text over the SQL ``expr``."""
-    as_dot_decimal = f"regexp_replace({expr}, ',', '')"
-    as_comma_decimal = f"regexp_replace(regexp_replace({expr}, {_DOT_REGEX}, ''), ',', '.')"
+    as_dot_decimal = f"replace({expr}, ',', '')"
+    as_comma_decimal = f"replace(replace({expr}, '.', ''), ',', '.')"
     if mode == ".":
         return as_dot_decimal
     if mode == ",":
@@ -139,8 +136,10 @@ def render_number(
     formatting would (``string.Format(cultureInfo, "{0}", v)``:
     culture decimal separator, NO thousands grouping; grouping=True adds
     the culture's group separator like an explicit "{0:N}" format).
-    Pure Column expressions — cast to string, then a 1:1 separator
-    translate; decimal-typed inputs render exact digits on any engine."""
+    Pure Column expressions — cast to string, then a separator
+    ``replace`` (``translate`` only for the simultaneous '.,' swap of a
+    grouped render, which sequential replaces cannot express);
+    decimal-typed inputs render exact digits on any engine."""
     dec, grp = culture_number_format(culture)
     if grouping:
         rendered = F.format_number(col.cast("double"), 2)
@@ -149,7 +148,7 @@ def render_number(
         return rendered
     rendered = col.cast("string")
     if dec != ".":
-        rendered = F.translate(rendered, ".", dec)
+        rendered = F.replace(rendered, F.lit("."), F.lit(dec))
     return rendered
 
 
@@ -165,5 +164,5 @@ def render_number_sql(
         return rendered
     rendered = f"CAST({expr} AS STRING)"
     if dec != ".":
-        rendered = f"translate({rendered}, '.', {sql_string(dec)})"
+        rendered = f"replace({rendered}, '.', {sql_string(dec)})"
     return rendered

@@ -3,9 +3,11 @@
 A JobSpec is the executable unit — source + destination + mappings
 (CSVProvider.cs:543-601). Each active mapping with ≥1 column mapping
 compiles to an independent DataFrame pipeline and writes its own output
-(writer gate at CSVProvider.cs:556); the reference pumps them serially
-row-at-a-time, we submit each as a Spark action (embarrassingly parallel
-across mappings, partition-parallel within one).
+(writer gate at CSVProvider.cs:556). Like the reference, ``run_job`` runs
+the mappings one after another; where the reference pumps each mapping
+row-at-a-time, here each is one Spark action whose scan is split across
+the session's cores (``spark.sql.files.openCostInBytes`` in
+:func:`~.session.get_spark` splits even a small file).
 
 Config round-trips as JSON (the reference's XML round-trip, J3,
 CSVProvider.cs:317-351,363-454, re-expressed without XML).
@@ -14,6 +16,7 @@ CSVProvider.cs:317-351,363-454, re-expressed without XML).
 from __future__ import annotations
 
 import json
+import logging
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -21,6 +24,8 @@ from pyspark.sql import SparkSession
 from .plans.mapping_compiler import Mapping, compile_mapping
 from .sinks.csv_sink import CsvSink, CsvSinkOptions
 from .sources.csv_source import CsvSource, CsvSourceOptions
+
+log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -89,8 +94,10 @@ class JobSpec:
 def run_job(spark: SparkSession, job: JobSpec, stability_pause: float = 5.0) -> JobResult:
     """Execute every active mapping: scan → filter → project/transform →
     CSV sink. Validation raises before any Spark action (S5); job-level
-    errors are captured, not thrown (E5, CSVProvider.cs:580-599)."""
-    job.source.validate()
+    errors are captured, not thrown (E5, CSVProvider.cs:580-599);
+    validation warnings are logged (CSVProvider.cs:274-277)."""
+    for warning in job.source.validate():
+        log.warning("%s", warning)
     if job.check_stability:
         job.source.check_source_files_changing(stability_pause)
 

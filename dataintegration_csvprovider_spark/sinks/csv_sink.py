@@ -77,7 +77,7 @@ class CsvSink:
         scrub, joined with the delimiter. concat_ws skips NULLs, so cells
         are rendered via csv_quote first (NULL → unquoted sentinel).
         Float/double/decimal columns render through the job culture (T6)
-        — a no-op translate for '.'-decimal cultures. The whole render
+        — a plain cast for '.'-decimal cultures. The whole render
         is one Spark SQL expression."""
         o = self.options
         cells = []

@@ -22,7 +22,10 @@ on Spark's CSV DataSource:
   record column available for audit.
 - E3 duplicate-header rejection (CSVSourceReader.cs:245-273).
 
-Scale notes: the Spark CSV scan is file-split parallel; ``multi_line``
+Scale notes: the Spark CSV scan is file-split parallel, and a single file
+above 256 KB splits across the session's cores (``get_spark`` lowers
+``spark.sql.files.openCostInBytes`` from 4 MB), each split starting at
+its first line break; ``multi_line``
 (quoted embedded newlines, the reference parser's default behavior) makes
 files non-splittable, so it defaults off and is an explicit fidelity knob.
 The scan parses every column of a row (the reader's ``columnPruning``

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 
 from dataintegration_csvprovider_spark.functions.datetimefmt import (
@@ -179,6 +181,27 @@ def test_job_spec_json_roundtrip(tmp_path):
     assert back.mappings[0].column_mappings[0].dest_type == "double"
     assert back.mappings[0].conditionals[0].op == "gt"
     assert back.to_json() == job.to_json()
+
+
+def test_validation_warnings_logged(spark, tmp_path, caplog):
+    # S5: a source with both a file and a folder warns that the file
+    # overrides (CSVProvider.cs:274-277); run_job logs the warning
+    srcdir = tmp_path / "in"
+    srcdir.mkdir()
+    (srcdir / "t.csv").write_text("a;b\n1;2\n")
+    job = JobSpec(
+        source=CsvSource(folder=str(srcdir), file=str(srcdir / "t.csv")),
+        destination=CsvSink(folder=str(tmp_path / "out")),
+        mappings=[Mapping(source_table="t", column_mappings=[ColumnMapping(source_column="a")])],
+    )
+    with caplog.at_level(logging.WARNING, logger="dataintegration_csvprovider_spark.jobs"):
+        res = run_job(spark, job)
+    assert res.success, res.errors
+    warnings = [r for r in caplog.records if r.name == "dataintegration_csvprovider_spark.jobs"]
+    assert [r.getMessage() for r in warnings] == [
+        "both source file and folder are set; the file overrides"
+    ]
+    assert all(r.levelno == logging.WARNING for r in warnings)
 
 
 def test_job_error_capture(spark, tmp_path):
