@@ -18,29 +18,33 @@ mutual near-dups.
 
 Physical shape per round: neighborhood minima come from a window `min`
 over the node partition — no `collect_list`, so a hub node with 10M
-neighbors never materializes its neighbor array in one task. Lineage is
-truncated with an eager `localCheckpoint` every round (the edge set
-shrinks monotonically per round, and iterative-join lineage otherwise
-compounds planning cost — same trade measured for PageRank,
+neighbors never materializes its neighbor array in one task. Each plan
+is Spark SQL text (`selectExpr`/`where`), a handful of py4j calls per
+round. Lineage is truncated with a `localCheckpoint` every round (the
+edge set shrinks monotonically per round, and iterative-join lineage
+otherwise compounds planning cost — same trade measured for PageRank,
 operators/graph.py). Convergence is detected by an order-insensitive
-edge-set checksum (count + decimal sum of xxhash64), one tiny action
-per round.
+edge-set checksum (count + decimal sum of xxhash64). A round is ONE
+action: a single aggregate grouped by side over the round's input and
+output edge sets checksums both, and that same job materializes the
+lazily checkpointed output; the round count stops when the two
+checksums agree. There is no separate checksum of the input edges.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_ident
 
-def _canon(edges: DataFrame) -> DataFrame:
-    """Canonicalize to (hi, lo), drop self-loops, dedup."""
+
+def _canon(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """Canonicalize the SQL columns ``src``/``dst`` to (hi, lo), drop
+    self-loops, dedup."""
     return (
-        edges.select(
-            F.greatest("src", "dst").alias("hi"),
-            F.least("src", "dst").alias("lo"),
-        )
-        .filter(F.col("hi") != F.col("lo"))
+        edges.selectExpr(f"greatest({src}, {dst}) AS hi", f"least({src}, {dst}) AS lo")
+        .where("hi != lo")
         .distinct()
     )
 
@@ -57,36 +61,39 @@ def _large_star(edges: DataFrame) -> DataFrame:
     dedups before the checksum). Dropping the intermediate distinct
     removes one full shuffle per contraction round; the per-round edge
     SET (checksum, convergence, labels) is unchanged."""
-    d = edges.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionAll(
-        edges.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-    )
-    w = Window.partitionBy("u")
-    m = F.least(F.min("v").over(w), F.col("u"))
     return (
-        d.withColumn("m", m)
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
+        edges.selectExpr("hi AS u", "lo AS v")
+        .unionAll(edges.selectExpr("lo AS u", "hi AS v"))
+        .selectExpr("u", "v", "least(min(v) OVER (PARTITION BY u), u) AS m")
+        .where("v > u")
+        .selectExpr("v AS hi", "m AS lo")
     )
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """For each node u, connect u and all its smaller neighbors to the
     minimum of those neighbors."""
-    w = Window.partitionBy("hi")
-    withm = edges.withColumn("m", F.min("lo").over(w))
+    withm = edges.selectExpr("hi", "lo", "min(lo) OVER (PARTITION BY hi) AS m")
     return _canon(
-        withm.select(F.col("lo").alias("src"), F.col("m").alias("dst")).unionAll(
-            withm.select(F.col("hi").alias("src"), F.col("m").alias("dst"))
+        withm.selectExpr("lo AS src", "m AS dst").unionAll(
+            withm.selectExpr("hi AS src", "m AS dst")
         )
     )
 
 
-def _checksum(edges: DataFrame) -> tuple[int, object]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("hi", "lo").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    return row["n"], row["h"]
+def _unchanged(before: DataFrame, after: DataFrame) -> bool:
+    """Whether two edge sets have the same order-insensitive checksum
+    (count + decimal sum of xxhash64): one aggregate over both, one
+    action."""
+    rows = (
+        before.selectExpr("0 AS side", "hi", "lo")
+        .unionAll(after.selectExpr("1 AS side", "hi", "lo"))
+        .groupBy("side")
+        .agg(F.expr("count(1)"), F.expr("sum(CAST(xxhash64(hi, lo) AS DECIMAL(38,0)))"))
+        .collect()
+    )
+    sums = {r[0]: tuple(r[1:]) for r in rows}
+    return sums.get(0) == sums.get(1)
 
 
 def connected_components(
@@ -117,30 +124,20 @@ def connected_components_stats(
     small constant, vs n rounds for naive min-label propagation on a
     chain. Returns (labels, n_rounds) where n_rounds counts contraction
     rounds EXECUTED including the fixpoint-confirming one."""
-    # r13 (guide §1.2 — one action per round, not two): the checkpoint
-    # is LAZY; the checksum action both materializes the round's edge
-    # set and truncates its lineage in the same job. Eager + separate
-    # checksum was two jobs per contraction round for the same work.
-    e = _canon(
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    ).localCheckpoint(eager=False)
-    sig = _checksum(e)
-    rounds = 0
-    for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        rounds += 1
-        new_sig = _checksum(e)
-        if new_sig == sig:
+    # one action per round: the checkpoint is LAZY, and the round's
+    # checksum aggregate materializes the new edge set (truncating its
+    # lineage) while it compares it with the previous one
+    e = _canon(edges, sql_ident(src), sql_ident(dst)).localCheckpoint(eager=False)
+    for rounds in range(1, max_iter + 1):
+        prev, e = e, _small_star(_large_star(e)).localCheckpoint(eager=False)
+        if _unchanged(prev, e):
             break
-        sig = new_sig
     else:
         raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
     # fixpoint edge set is a star per component: hi -> component min
     labels = (
-        e.select(F.col("hi").alias("node"), F.col("lo").alias("component"))
-        .unionAll(
-            e.select(F.col("lo").alias("node"), F.col("lo").alias("component"))
-        )
+        e.selectExpr("hi AS node", "lo AS component")
+        .unionAll(e.selectExpr("lo AS node", "lo AS component"))
         .distinct()
     )
     return labels, rounds

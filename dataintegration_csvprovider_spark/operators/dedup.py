@@ -8,7 +8,9 @@ plan visible and AQE can re-plan skew:
   no Python) → band-bucket join for candidates → exact signature-overlap
   verify → connected components → keep component representative. The
   classic near-dup pipeline (Broder '97; Lee et al. "Deduplicating
-  Training Data Makes Language Models Better").
+  Training Data Makes Language Models Better"). Its plans are Spark SQL
+  text (the ``*_sql`` builders below), so building one costs a few
+  hundred py4j round trips rather than thousands.
 - SimHash: 64-bit sign-of-weighted-sum fingerprint (Charikar '02) with
   (max_hamming + 1)-chunk blocking for hamming-distance candidates
   (pigeonhole: some chunk is identical for every true pair).
@@ -27,6 +29,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from ..functions.sqltext import sql_ident, sql_literal, sql_string
+from ._util import spread as _spread
+
+#: the word separator of every shingle (a regex; Java's ``\s`` class)
+_WORD_BREAK = "\\s+"
 
 
 # --------------------------------------------------------------------------
@@ -62,7 +70,7 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     multiply whole-stage-codegen compile time several-fold. Text is
     trimmed first: leading/trailing whitespace would otherwise produce
     empty tokens and junk shingles."""
-    words = F.split(F.trim(text), "\\s+")
+    words = F.split(F.trim(text), _WORD_BREAK)
     n = F.size(words)
     m = F.greatest(n - k + 1, F.lit(0))  # number of k-shingles
     # zip k length-m shifted views of the word array; a zip_with chain is
@@ -75,7 +83,17 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     return F.array_distinct(sh)
 
 
-from ._util import spread as _spread
+def word_shingles_sql(expr: str, k: int = 3) -> str:
+    """:func:`word_shingles` as Spark SQL text over the SQL ``expr``."""
+    words = f"split(trim({expr}), {sql_string(_WORD_BREAK)})"
+    m = f"greatest(size({words}) - {k} + 1, 0)"
+    sh = f"slice({words}, 1, {m})"
+    for j in range(1, k):
+        sh = (
+            f"zip_with({sh}, slice({words}, {j + 1}, {m}), "
+            f"(a, b) -> concat_ws({sql_string(' ')}, a, b))"
+        )
+    return f"array_distinct({sh})"
 
 
 def _with_content(df: DataFrame, text_col: str, min_words: int = 1) -> DataFrame:
@@ -87,12 +105,11 @@ def _with_content(df: DataFrame, text_col: str, min_words: int = 1) -> DataFrame
     threshold. Filtering rows HERE (a cheap scan predicate) keeps the
     downstream hash folds branch-free. Exact dedup still sees such rows;
     only near-dup search skips them."""
-    cond = F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
+    text = sql_ident(text_col)
+    cond = f"{text} IS NOT NULL AND trim({text}) != ''"
     if min_words > 1:
-        cond = cond & (
-            F.size(F.split(F.trim(F.col(text_col)), "\\s+")) >= min_words
-        )
-    return df.filter(cond)
+        cond += f" AND size(split(trim({text}), {sql_string(_WORD_BREAK)})) >= {min_words}"
+    return df.where(cond)
 
 
 def minhash_mix(i: int) -> tuple[int, int]:
@@ -113,20 +130,24 @@ def minhash_signatures(
     base_hash: str = "xxhash64",
 ) -> DataFrame:
     """Add a ``signature`` array<bigint> column: for each of ``num_hashes``
-    seeded hash functions, the min hash over the doc's shingles.
+    seeded hash functions, the min hash over the doc's shingles. Returns
+    (``id_col``, ``text_col``, signature).
 
-    One narrow pass, no shuffle: a single SQL-HOF fold over the shingles
-    hashes each shingle ONCE with xxhash64 and updates all ``num_hashes``
-    running minima in place (zip_with against literal multiplier/offset
-    arrays). This replaces the earlier per-seed form (64 separate
-    transform+array_min traversals of the hash array) — measured ~5×
-    faster at sf0.1 with bit-identical signatures. Each permutation is
-    the standard universal-hashing family pmod(h31*A_i + B_i, 2^31-1);
-    with the base hash masked to 31 bits, a*h + b < 2^62, so no bigint
-    overflow (ANSI mode throws on wrap). The mod p is essential: without
-    it the map is monotone in h31 and every seed would pick the same
-    min-shingle. All whole-stage codegen, no UDF; NULL text folds to a
-    NULL signature (dropped by the pair generators' content filter).
+    One narrow pass, no shuffle, no UDF: the whole projection is one
+    Spark SQL text (:func:`_minhash_sql`), a single HOF fold over the
+    shingles that hashes each shingle ONCE and updates all
+    ``num_hashes`` running minima in one ``zip_with`` against a literal
+    array of (multiplier, offset) structs. This replaces the earlier
+    per-seed form (64 separate transform+array_min traversals of the
+    hash array, ~5x slower) and a two-``zip_with`` form that first built
+    the candidate array, then took the pairwise minimum. Each
+    permutation is the standard universal-hashing family pmod(h31*A_i +
+    B_i, 2^31-1); with the base hash masked to 31 bits, a*h + b < 2^62,
+    so no bigint overflow (ANSI mode throws on wrap). The mod p is
+    essential: without it the map is monotone in h31 and every seed
+    would pick the same min-shingle. NULL text folds to a NULL
+    signature, a doc with no shingle to the all-``Long.MAX`` init array
+    (the pair generators' content filter drops both).
 
     ``base_hash`` picks the 31-bit shingle hash feeding the permutation
     family: ``"xxhash64"`` (default — the fastest JVM path, no SQL
@@ -137,9 +158,17 @@ def minhash_signatures(
     and pair set cross-engine). Same signature laws either way; md5
     costs one digest per shingle instead of one xxhash — fine for
     gates and audits, measurably slower as the 100 TB default."""
+    fold = _minhash_sql(
+        word_shingles_sql(sql_ident(text_col), shingle_size), num_hashes, base_hash
+    )
+    return _spread(df.select(id_col, text_col)).selectExpr(
+        sql_ident(id_col), sql_ident(text_col), f"{fold} AS signature"
+    )
 
-    a_lits = ",".join(str(minhash_mix(i)[0]) for i in range(num_hashes))
-    b_lits = ",".join(str(minhash_mix(i)[1]) for i in range(num_hashes))
+
+def _minhash_sql(grams: str, num_hashes: int, base_hash: str) -> str:
+    """The MinHash signature of the shingle array ``grams`` as Spark SQL
+    text (see :func:`minhash_signatures`)."""
     if base_hash == "xxhash64":
         h31 = "xxhash64(g) & 2147483647L"
     elif base_hash == "md5":
@@ -149,22 +178,16 @@ def minhash_signatures(
         )
     else:
         raise ValueError(f"unknown base_hash: {base_hash!r}")
-    fold = f"""
-    aggregate(
-      transform(__grams, g -> {h31}),
-      array_repeat(9223372036854775807L, {num_hashes}),
-      (acc, h) -> zip_with(acc,
-          zip_with(array({a_lits}), array({b_lits}),
-                   (a, b) -> pmod(h * a + b, 2147483647L)),
-          (cur, cand) -> least(cur, cand))
+    mix = ", ".join(
+        "named_struct('a', {}, 'b', {})".format(*minhash_mix(i))
+        for i in range(num_hashes)
     )
-    """
-    base = _spread(df.select(id_col, text_col)).withColumn(
-        "__grams", word_shingles(F.col(text_col), shingle_size)
+    return (
+        f"aggregate(transform({grams}, g -> {h31}), "
+        f"array_repeat(9223372036854775807L, {num_hashes}), "
+        f"(acc, h) -> zip_with(acc, array({mix}), "
+        "(cur, s) -> least(cur, pmod(h * s.a + s.b, 2147483647L))))"
     )
-    # callers must pre-filter docs with no shingles (_with_content with
-    # min_words) — an empty gram set would fold to the init array here
-    return base.withColumn("signature", F.expr(fold)).drop("__grams")
 
 
 def _eager_release(result: DataFrame, *cached: DataFrame) -> DataFrame:
@@ -174,11 +197,25 @@ def _eager_release(result: DataFrame, *cached: DataFrame) -> DataFrame:
     reference-counted by the ContextCleaner (released when the returned
     DataFrame is garbage-collected), and checkpointing also truncates
     lineage, so downstream reuse of the (small) pair set never recomputes
-    the hash work."""
+    the hash work. The MinHash paths do without it: they checkpoint
+    their signature tables eagerly instead of persisting them
+    (:func:`_signature_table`), and those blocks are freed the same way
+    as a result's."""
     out = result.localCheckpoint(eager=True)
     for df in cached:
         df.unpersist()
     return out
+
+
+def _bands_sql(sig: str, num_bands: int, rows_per_band: int) -> str:
+    """The LSH bands of the signature ``sig`` as Spark SQL text: an array
+    of (band, bucket) structs, bucket = hash of that band's slice."""
+    piece = f"slice({sig}, b * {rows_per_band} + 1, {rows_per_band})"
+    return (
+        f"transform(sequence(0, {num_bands - 1}), b -> named_struct('band', b, "
+        f"'bucket', xxhash64(concat_ws({sql_string(',')}, "
+        f"transform({piece}, x -> CAST(x AS STRING))))))"
+    )
 
 
 def _band_buckets(
@@ -186,29 +223,26 @@ def _band_buckets(
     id_col: str = "doc_id",
     num_bands: int = 16,
     rows_per_band: int = 4,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Explode each signature into its LSH band buckets: one (id, band,
     bucket) row per band, where bucket = hash of that band's signature
-    slice. The bucket index is the joinable form of a corpus's minhash
-    state — equi-joins on (band, bucket) replace all-pairs work."""
-    bands = F.transform(
-        F.sequence(F.lit(0), F.lit(num_bands - 1)),
-        lambda b: F.struct(
-            b.alias("band"),
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.slice(F.col("signature"), b * rows_per_band + 1, rows_per_band),
-                        lambda x: x.cast("string"),
-                    ),
-                ),
-            ).alias("bucket"),
-        ),
+    slice; ``carry`` adds SQL select items after ``id``. The bucket index
+    is the joinable form of a corpus's minhash state — equi-joins on
+    (band, bucket) replace all-pairs work."""
+    return sigs.selectExpr(
+        f"{sql_ident(id_col)} AS id",
+        *carry,
+        f"inline({_bands_sql('signature', num_bands, rows_per_band)})",
     )
+
+
+def _overlap_sql(left: str, right: str, num_hashes: int) -> str:
+    """The fraction of equal positions of two signatures as Spark SQL
+    text — an unbiased Jaccard estimate."""
     return (
-        sigs.select(F.col(id_col).alias("id"), F.explode(bands).alias("bb"))
-        .select("id", "bb.band", "bb.bucket")
+        f"size(filter(zip_with({left}, {right}, (x, y) -> x = y), e -> e)) "
+        f"/ {num_hashes}"
     )
 
 
@@ -223,17 +257,39 @@ def lsh_candidate_pairs(
     Shuffle key = (band index, band hash): uniformly distributed unless
     the corpus is degenerate, and AQE skew-join splits hot buckets."""
     exploded = _band_buckets(sigs, id_col, num_bands, rows_per_band)
-    left = exploded.alias("l")
-    right = exploded.alias("r")
     return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
+        exploded.selectExpr("id AS a", "band", "bucket")
+        .join(exploded.selectExpr("id AS b", "band", "bucket"), ["band", "bucket"])
+        .where("a < b")
+        .select("a", "b")
         .distinct()
+    )
+
+
+def _signature_table(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    shingle_size: int,
+    base_hash: str = "xxhash64",
+) -> DataFrame:
+    """(``id_col``, signature) of every doc with at least one shingle,
+    computed once: an eager ``localCheckpoint``. The table feeds the
+    band join and both verify sides; persisted instead, AQE submitted
+    those exchanges as concurrent jobs that queued on the same blocks,
+    and every stage re-planned the fold."""
+    return (
+        minhash_signatures(
+            _with_content(df, text_col, min_words=shingle_size),
+            text_col,
+            id_col,
+            num_hashes,
+            shingle_size,
+            base_hash,
+        )
+        .select(id_col, "signature")
+        .localCheckpoint(eager=True)
     )
 
 
@@ -250,38 +306,17 @@ def minhash_near_dup_pairs(
     """Near-duplicate pairs (a, b, est_jaccard): LSH candidates verified by
     exact signature overlap (fraction of equal minhash positions — an
     unbiased Jaccard estimate)."""
-    rows_per_band = num_hashes // num_bands
-    sigs = minhash_signatures(
-        _with_content(df, text_col, min_words=shingle_size),
-        text_col,
-        id_col,
-        num_hashes,
-        shingle_size,
-        base_hash,
-    )
-    # signatures feed three plan branches (banding + both verify sides);
-    # persist so the hash work runs once
-    sigs = sigs.persist()
-    cands = lsh_candidate_pairs(sigs, id_col, num_bands, rows_per_band)
-    sa = sigs.select(F.col(id_col).alias("a"), F.col("signature").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("b"), F.col("signature").alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                lambda eq: eq == 1,
-            )
-        )
-        / F.lit(num_hashes)
-    ).cast("double")
-    pairs = (
+    sigs = _signature_table(df, text_col, id_col, num_hashes, shingle_size, base_hash)
+    cands = lsh_candidate_pairs(sigs, id_col, num_bands, num_hashes // num_bands)
+    sa = sigs.selectExpr(f"{sql_ident(id_col)} AS a", "signature AS sig_a")
+    sb = sigs.selectExpr(f"{sql_ident(id_col)} AS b", "signature AS sig_b")
+    return (
         cands.join(sa, "a")
         .join(sb, "b")
-        .withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("a", "b", "est_jaccard")
+        .selectExpr("a", "b", f"{_overlap_sql('sig_a', 'sig_b', num_hashes)} AS est_jaccard")
+        .where(f"est_jaccard >= {sql_literal(float(threshold))}")
+        .localCheckpoint(eager=True)
     )
-    return _eager_release(pairs, sigs)
 
 
 def connected_components(
@@ -404,27 +439,9 @@ def incremental_near_dup_flags(
     signature overlap (unbiased Jaccard estimate), same contract as
     :func:`minhash_near_dup_pairs`."""
     rows_per_band = num_hashes // num_bands
-    release = []
     if corpus_sigs is None:
-        # computed here, the corpus signatures feed two plan branches
-        # (band buckets + the verify join) — persist for the call, like
-        # the batch side; a passed-in snapshot is the caller's to cache
-        corpus_sigs = minhash_signatures(
-            _with_content(corpus, text_col, min_words=shingle_size),
-            text_col,
-            id_col,
-            num_hashes,
-            shingle_size,
-        ).persist()
-        release.append(corpus_sigs)
-    batch_sigs = minhash_signatures(
-        _with_content(batch, text_col, min_words=shingle_size),
-        text_col,
-        id_col,
-        num_hashes,
-        shingle_size,
-    ).persist()
-    release.append(batch_sigs)
+        corpus_sigs = _signature_table(corpus, text_col, id_col, num_hashes, shingle_size)
+    batch_sigs = _signature_table(batch, text_col, id_col, num_hashes, shingle_size)
     cb = _band_buckets(batch_sigs, id_col, num_bands, rows_per_band)
     cc = _band_buckets(corpus_sigs, id_col, num_bands, rows_per_band)
     cands = (
@@ -432,31 +449,20 @@ def incremental_near_dup_flags(
         .select("id", "corpus_id")
         .distinct()
     )
-    sb = batch_sigs.select(F.col(id_col).alias("id"), F.col("signature").alias("sig_b"))
-    sc = corpus_sigs.select(
-        F.col(id_col).alias("corpus_id"), F.col("signature").alias("sig_c")
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_b", "sig_c", lambda x, y: (x == y).cast("int")),
-                lambda eq: eq == 1,
-            )
-        )
-        / F.lit(num_hashes)
-    ).cast("double")
-    flags = (
+    sb = batch_sigs.selectExpr(f"{sql_ident(id_col)} AS id", "signature AS sig_b")
+    sc = corpus_sigs.selectExpr(f"{sql_ident(id_col)} AS corpus_id", "signature AS sig_c")
+    return (
         cands.join(sb, "id")
         .join(sc, "corpus_id")
-        .withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= threshold)
+        .selectExpr("id", f"{_overlap_sql('sig_b', 'sig_c', num_hashes)} AS est_jaccard")
+        .where(f"est_jaccard >= {sql_literal(float(threshold))}")
         .groupBy(F.col("id").alias(id_col))
         .agg(
             F.max("est_jaccard").alias("max_est_jaccard"),
             F.count(F.lit(1)).alias("n_corpus_dups"),
         )
+        .localCheckpoint(eager=True)
     )
-    return _eager_release(flags, *release)
 
 
 # --------------------------------------------------------------------------
@@ -1302,50 +1308,21 @@ def stream_near_dup_flags(
         shingle_size,
         base_hash,
     )
-    # band-bucket explode CARRYING the signature (the batch helper drops
-    # it; re-joining it here would be a stream-stream join)
-    bands = F.transform(
-        F.sequence(F.lit(0), F.lit(num_bands - 1)),
-        lambda b: F.struct(
-            b.alias("band"),
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    F.transform(
-                        F.slice(
-                            F.col("signature"), b * rows_per_band + 1, rows_per_band
-                        ),
-                        lambda x: x.cast("string"),
-                    ),
-                ),
-            ).alias("bucket"),
-        ),
+    # the stream side carries its signature through the explode:
+    # re-joining it would be a stream-stream join
+    stream_bb = _band_buckets(
+        sigs, id_col, num_bands, rows_per_band, carry=("signature AS sig_b",)
     )
-    stream_bb = sigs.select(
-        F.col(id_col).alias("id"),
-        F.col("signature").alias("sig_b"),
-        F.explode(bands).alias("bb"),
-    ).select("id", "sig_b", "bb.band", "bb.bucket")
     idx = _band_buckets(corpus_sigs, id_col, num_bands, rows_per_band).join(
-        corpus_sigs.select(
-            F.col(id_col).alias("id"), F.col("signature").alias("sig_c")
-        ),
+        corpus_sigs.selectExpr(f"{sql_ident(id_col)} AS id", "signature AS sig_c"),
         "id",
-    ).select(F.col("id").alias("corpus_id"), "sig_c", "band", "bucket")
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_b", "sig_c", lambda x, y: (x == y).cast("int")),
-                lambda eq: eq == 1,
-            )
-        )
-        / F.lit(num_hashes)
-    ).cast("double")
+    ).selectExpr("id AS corpus_id", "sig_c", "band", "bucket")
     return (
         stream_bb.join(idx, ["band", "bucket"])
-        .withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id", "corpus_id", "est_jaccard")
+        .selectExpr(
+            "id", "corpus_id", f"{_overlap_sql('sig_b', 'sig_c', num_hashes)} AS est_jaccard"
+        )
+        .where(f"est_jaccard >= {sql_literal(float(threshold))}")
     )
 
 

@@ -458,6 +458,29 @@ def test_connected_components_chain_clique_singleton(spark):
     }
 
 
+def test_connected_components_round_counts(spark):
+    # rounds executed, including the one that confirms the fixpoint: the
+    # chain/clique graph above, the 50-edge path and a 50-leaf star give
+    # 3, 7 and 1 since the Column-built plans with a separate input
+    # checksum
+    from dataintegration_csvprovider_spark.operators.components import (
+        connected_components_stats,
+    )
+
+    graphs = {
+        "chain_clique": [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (21, 20)],
+        "path": [(i, i + 1) for i in range(50)],
+        "star": [(0, i) for i in range(1, 51)],
+    }
+    rounds = {
+        name: connected_components_stats(
+            spark.createDataFrame(edges, "src long, dst long")
+        )[1]
+        for name, edges in graphs.items()
+    }
+    assert rounds == {"chain_clique": 3, "path": 7, "star": 1}
+
+
 def test_connected_components_duplicate_and_reversed_edges(spark):
     edges = spark.createDataFrame(
         [(5, 6), (6, 5), (5, 6), (7, 6)], "src long, dst long"
