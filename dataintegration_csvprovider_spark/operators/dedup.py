@@ -705,42 +705,34 @@ def _choose_jaccard_method(
     return "prefix"
 
 
-def _dense_jaccard_pairs(
-    grams: DataFrame, threshold: float, vocab: list | None = None
-) -> DataFrame:
-    """Exact Jaccard pairs for the dense small-corpus regime: pack each
-    doc's gram set into a bitset over the (tiny) global vocabulary,
-    broadcast the whole packed matrix, and score block-pairs with a
-    float32 matmul (popcount-by-dot-product; counts ≤ vocab < 2^24 so
-    every partial sum is an exactly-representable integer). The final
-    jaccard is computed in float64 — bit-identical to SQL's
-    ``common / (|A|+|B|-common)``.
+def _jaccard_keep(threshold: float):
+    """The block-pair keep predicate of exact Jaccard: ``common /
+    (|A| + |B| - common) >= threshold`` in float64, bit-identical to
+    SQL's division; the value is the ``jaccard`` column."""
+    import numpy as np
 
-    Only reachable through :func:`_choose_jaccard_method`'s bounds (or an
-    explicit override), which cap the driver collect at ~64 MB of packed
-    bits and the pairwise work at ~2e12 multiply-adds; this is the one
-    regime where an O(n²) scorer is the *right* plan — the inverted index
-    degenerates to the same quadratic with far worse constants."""
+    t = float(threshold)
+
+    def keep(common, dot, size_a, size_b):
+        with np.errstate(divide="ignore", invalid="ignore"):
+            jac = common / (size_a[:, None] + size_b[None, :] - common)
+        return jac >= t, jac
+
+    return keep
+
+
+def _gram_bitsets(grams: DataFrame, vocab: list):
+    """Each doc's gram set packed into a bitset over ``vocab`` on the
+    executors, collected in ascending id order: ``(ids, packed bits,
+    set sizes)``."""
     import numpy as np
     import pandas as pd
 
-    spark = grams.sparkSession
-    id_type = grams.schema["id"].dataType.simpleString()
-    out_schema = f"a {id_type}, b {id_type}, jaccard double"
-    if vocab is None:
-        vocab = sorted(
-            r["gram"]
-            for r in grams.select(
-                F.explode("grams").alias("gram")
-            ).distinct().collect()
-        )
     v = len(vocab)
-    if v == 0:
-        return spark.createDataFrame([], out_schema)
-    if v >= 1 << 24:
-        raise ValueError("dense path requires vocab < 2^24 for exact float32 counts")
-    gid = {g: i for i, g in enumerate(vocab)}
-    bc_gid = spark.sparkContext.broadcast(gid)
+    id_type = grams.schema["id"].dataType.simpleString()
+    bc_gid = grams.sparkSession.sparkContext.broadcast(
+        {g: i for i, g in enumerate(vocab)}
+    )
 
     def pack(batches):
         g = bc_gid.value
@@ -759,54 +751,11 @@ def _dense_jaccard_pairs(
         .mapInPandas(pack, f"id {id_type}, bits binary")
         .collect()
     )
-    if not packed:
-        return spark.createDataFrame([], out_schema)
     packed.sort(key=lambda r: r["id"])
-    ids = [r["id"] for r in packed]
-    n = len(ids)
-    nbytes = (v + 7) // 8
     mat = np.frombuffer(b"".join(r["bits"] for r in packed), dtype=np.uint8)
-    mat = mat.reshape(n, nbytes)
+    mat = mat.reshape(len(packed), (v + 7) // 8)
     sizes = np.unpackbits(mat, axis=1, count=v).sum(axis=1).astype(np.float64)
-    bc = spark.sparkContext.broadcast((ids, mat, sizes))
-    # block size: ~16 row-blocks for small n (good task fan-out), capped at
-    # 2048 rows so per-task unpacked blocks + the common matrix stay ~tens
-    # of MB at the regime's upper bound
-    block = min(2048, max(256, -(-n // 16)))
-    nb = -(-n // block)
-    tasks = [(bi, bj) for bi in range(nb) for bj in range(bi, nb)]
-    thr = float(threshold)
-
-    def score(batches):
-        ids_b, mat_b, sizes_b = bc.value
-        idarr = np.asarray(ids_b)
-        for pdf in batches:
-            for bi, bj in zip(pdf["bi"], pdf["bj"]):
-                ra = slice(bi * block, min((bi + 1) * block, n))
-                rb = slice(bj * block, min((bj + 1) * block, n))
-                A = np.unpackbits(mat_b[ra], axis=1, count=v).astype(np.float32)
-                B = np.unpackbits(mat_b[rb], axis=1, count=v).astype(np.float32)
-                common = (A @ B.T).astype(np.float64)
-                union = sizes_b[ra][:, None] + sizes_b[rb][None, :] - common
-                jac = common / union
-                mask = jac >= thr
-                if bi == bj:
-                    mask &= np.triu(np.ones(mask.shape, dtype=bool), k=1)
-                if mask.any():
-                    ai, bix = np.nonzero(mask)
-                    yield pd.DataFrame(
-                        {
-                            "a": idarr[ra][ai],
-                            "b": idarr[rb][bix],
-                            "jaccard": jac[mask],
-                        }
-                    )
-
-    par = grams.sparkSession.sparkContext.defaultParallelism
-    tasks_df = spark.createDataFrame(tasks, "bi int, bj int").repartition(
-        min(len(tasks), par * 2)
-    )
-    return tasks_df.mapInPandas(score, out_schema)
+    return np.asarray([r["id"] for r in packed]), mat, sizes
 
 
 def ngram_jaccard_pairs(
@@ -824,8 +773,9 @@ def ngram_jaccard_pairs(
     the exact inverted-index join size Σdf²; each is one metadata fetch
     or aggregation pass):
 
-    - ``dense`` (auto, small-corpus regime): broadcast packed-bitset +
-      blocked matmul. Chosen when the vocabulary is tiny/uniform — the
+    - ``dense`` (auto, small-corpus regime): packed gram bitsets scored
+      by the package's one block-pair scorer (operators/blockpairs.py,
+      driver layout). Chosen when the vocabulary is tiny/uniform — the
       regime where inverted indexes degenerate to Σdf² ≈ n²·avg_set with
       shuffle-join constants; measured ~5× faster than 'index' on the
       931-gram test fixture. Bounded by :data:`DENSE_MAX_DOCS`/CELLS/MULS
@@ -861,6 +811,7 @@ def ngram_jaccard_pairs(
         word_shingles(F.col(text_col), n).alias("grams"),
     ).withColumn("set_size", F.size("grams"))
 
+    vocab = None
     if method == "auto":
         # Round-14 (guide §1.2 — don't compute things twice, in EITHER
         # regime): the r13 "one-pass" fold computed (v, Σdf²) in one
@@ -929,11 +880,7 @@ def ngram_jaccard_pairs(
                     n_docs, len(rows), sum_df2=sum_df2, parallelism=par
                 )
                 if method == "dense":
-                    return _dense_jaccard_pairs(
-                        grams,
-                        threshold,
-                        vocab=sorted(r["gram"] for r in rows),
-                    )
+                    vocab = sorted(r["gram"] for r in rows)
             else:
                 # vocabulary overflows the dense box (or the fetch cap,
                 # possible only under ~CELLS/FETCH = 128 docs — any
@@ -943,7 +890,29 @@ def ngram_jaccard_pairs(
             method = _full_stats(skip_dense=False)
 
     if method == "dense":
-        return _dense_jaccard_pairs(grams, threshold)
+        import numpy as np
+
+        from .blockpairs import driver_block_pairs
+
+        if vocab is None:
+            vocab = sorted(
+                r["gram"]
+                for r in grams.select(F.explode("grams").alias("gram"))
+                .distinct()
+                .collect()
+            )
+        ids, bits, sizes = _gram_bitsets(grams, vocab)
+        v = len(vocab)
+        return driver_block_pairs(
+            grams.sparkSession,
+            ids,
+            bits,
+            sizes,
+            _jaccard_keep(threshold),
+            grams.schema["id"].dataType.simpleString(),
+            "jaccard",
+            unpack=lambda rows: np.unpackbits(rows, axis=1, count=v),
+        )
 
     if method == "index":
         inv = grams.select("id", "set_size", F.explode("grams").alias("gram"))

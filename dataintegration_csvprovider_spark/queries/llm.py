@@ -3737,8 +3737,8 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 decimal-sum migration: rare-term IDF odds scale with corpus
     # size (w ~ N), so w*w sums are data-scaled — pico-unit form
     # (per-row domain 1e12 covers w^2 through ~sf1e4)
-    # lazy: the first consumer (dense prune's collect, or the prefix
-    # path's u_norm join action) materializes it
+    # lazy: the first consumer (the matmul pre-prune's norm fetch, or
+    # the prefix path's u_norm join action) materializes it
     norms = w.groupBy("doc_id").agg(
         F.sqrt(dsum12(F.col("w") * F.col("w"))).alias("nrm")
     ).localCheckpoint(eager=False)
@@ -3758,47 +3758,24 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rounding in the normalized weights; verification below is the
     # SAME decimal-exact arithmetic as before, so results are
     # bit-identical — the filter only prunes pairs it can prove away.
-    from pyspark.sql import Window as W
-
-    # Round-13 optimization (guide §1.2 — fix the algorithm in the
-    # regime where it is wrong): this fixture class is the documented
-    # adversarial case for the AllPairs prefix filter — the tiny
-    # uniform vocabulary makes 12.2M of 12.5M possible pairs survive
-    # as candidates at sf0.1, and the double pre-prune then explodes
-    # to ~250M shared-term join rows (the measured ~30s wall). In
-    # that DENSE regime (box-gated exactly like operators/dedup.py's
-    # _dense_jaccard_pairs: the weight matrix must broadcast
-    # comfortably, the pairwise work must stay bounded) the pre-prune
-    # is a blocked float64 matmul over the broadcast (docs × vocab)
-    # weight matrix instead: pairwise double dots and shared-term
-    # counts come out of two BLAS block passes, and the SAME
-    # soundness argument holds — every product is positive, so the
-    # summed dot's relative error is <= (n_t+1)·2⁻⁵³ for ANY
-    # summation order, BLAS included. Survivors feed the UNCHANGED
-    # exact-decimal verification, so the output is bit-identical: the
-    # pre-prune only drops pairs it can PROVE the exact filter would
-    # drop. Outside the box (real Zipfian corpora) the prefix path
-    # below runs unchanged.
-    if (
+    #
+    # Dense-shaped corpora (tiny uniform vocabulary) defeat the AllPairs
+    # prefix filter: ~every pair survives as a candidate (12.2M of 12.5M
+    # at sf0.1) and the shared-term explosion dominates. There the
+    # pre-prune is the block-pair matmul scorer (operators/blockpairs.py)
+    # with _tfidf_keep's sound per-pair bound; survivors feed the same
+    # exact-decimal verify, so the output is identical whichever
+    # pre-prune ran. The boxes pick the scorer's layout (driver inside
+    # the driver box, executor-packed above it); real Zipfian corpora
+    # fall outside both and take the prefix path.
+    dense_shaped = (
         n_docs <= _TFIDF_DENSE_MAX_DOCS
-        and n_docs * n_terms <= _TFIDF_DENSE_MAX_CELLS
         and n_docs * n_docs * n_terms <= _TFIDF_DENSE_MAX_MULS
-    ):
-        surv = _tfidf_dense_prune_survivors(spark, w, norms)
-    elif (
-        # r14 (r13 verdict item 4): dense-SHAPED but above the driver
-        # box — small vocabulary defeats the AllPairs prefix filter
-        # (~every pair survives as a candidate and the shared-term
-        # explosion dominates), so run the blocked matmul pre-prune
-        # executor-side instead. Same keep bound, same exact verify —
-        # outputs identical (equivalence-probed against the prefix
-        # path at sf1). Real Zipfian corpora have vocab >> docs·cells
-        # bounds and keep taking the prefix path below.
-        n_docs <= _TFIDF_DENSE_MAX_DOCS
-        and n_docs * n_terms <= _TFIDF_BLOCK_MAX_CELLS
-        and n_docs * n_docs * n_terms <= _TFIDF_DENSE_MAX_MULS
-    ):
-        surv = _tfidf_blocked_prune_survivors(spark, w, norms)
+    )
+    if dense_shaped and n_docs * n_terms <= _TFIDF_DENSE_MAX_CELLS:
+        surv = _tfidf_matmul_survivors(spark, w, norms, executor=False)
+    elif dense_shaped and n_docs * n_terms <= _TFIDF_BLOCK_MAX_CELLS:
+        surv = _tfidf_matmul_survivors(spark, w, norms, executor=True)
     else:
         surv = _tfidf_prefix_prune_survivors(spark, w, norms, n_par)
     dots = (
@@ -3814,18 +3791,7 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # above that noise floor makes the full value-hash deterministic
     cos = F.round(F.col("dot") / (F.col("na") * F.col("nb")), 9)
     return (
-        dots.join(
-            F.broadcast(norms.select(
-                F.col("doc_id").alias("a"), F.col("nrm").alias("na")
-            )),
-            "a",
-        )
-        .join(
-            F.broadcast(norms.select(
-                F.col("doc_id").alias("b"), F.col("nrm").alias("nb")
-            )),
-            "b",
-        )
+        _with_norms(dots, norms)
         .select("a", "b", cos.alias("cosine"))
         .filter(F.col("cosine") >= 0.9)
     )
@@ -3842,17 +3808,11 @@ _TFIDF_DENSE_MAX_DOCS = 120_000
 _TFIDF_DENSE_MAX_CELLS = 16_000_000
 _TFIDF_DENSE_MAX_MULS = 2_500_000_000_000
 
-#: executor-side blocked-matmul regime (r14, r13 verdict item 4): dense-
-#: SHAPED corpora above the driver box — small vocabulary, so the
-#: AllPairs prefix filter admits ~every pair and the shared-term
-#: explosion is the dominator (measured: the sf1 fixture, 50k docs x
-#: 620 terms = 31M cells, runs the prefix path in 604 s; the blocked
-#: path replaces its tens of billions of join rows with ~B² dgemm
-#: block-pair tasks). The matrix NEVER exists on the driver: per-block
-#: slices are packed executor-side (applyInPandas) and shuffled to the
-#: block-pair tasks — driver transfers are O(n_docs + vocab) (sorted
-#: ids + norms + tids). The cells cap is an EXECUTOR budget: 128M
-#: cells = 1 GB of total matrix shuffled ~B times as <= 32 MB blobs.
+#: executor-layout box: dense-shaped corpora above the driver box (the
+#: sf1 fixture, 50k docs x 620 terms = 31M cells, ran the prefix path in
+#: 604 s). The matrix never exists on the driver, so the cells cap is an
+#: EXECUTOR budget: 128M cells = 1 GB of matrix, shuffled ~B times as
+#: <= 32 MB blocks.
 _TFIDF_BLOCK_MAX_CELLS = 128_000_000
 
 
@@ -3864,219 +3824,75 @@ def wb_frame(w: DataFrame) -> DataFrame:
     return w.select(F.col("doc_id").alias("b"), "tid", F.col("w").alias("wb"))
 
 
-def _tfidf_dense_prune_survivors(
-    spark: SparkSession, w: DataFrame, norms: DataFrame
-) -> DataFrame:
-    """Sound candidate survivors for the 0.9-cosine tf-idf pair filter,
-    dense regime: blocked float64 matmul of the broadcast weight matrix.
+def _with_norms(pairs: DataFrame, norms: DataFrame) -> DataFrame:
+    """``pairs`` with the norms of ``a`` and ``b`` as ``na`` and ``nb``."""
+    for side in ("a", "b"):
+        side_norms = norms.select(
+            F.col("doc_id").alias(side), F.col("nrm").alias(f"n{side}")
+        )
+        pairs = pairs.join(F.broadcast(side_norms), side)
+    return pairs
+
+
+def _tfidf_keep(threshold: float):
+    """Block-pair keep predicate of the ``threshold``-cosine tf-idf
+    pre-prune (the query runs it at 0.9).
 
     SOUNDNESS (no pair the exact path would emit is dropped): with all
-    products positive, |dot_blas − dot_true| <= (n_t+1)·2⁻⁵³·dot_true
-    and dot_true <= na·nb (Cauchy–Schwarz), while the exact path's only
-    other deviation is the per-product 12-dp quantization
-    (n_t·5e-13 absolute in dot units). The output keeps pairs with
-    round9(cos) >= 0.9, i.e. cos >= 0.9 − 5e-10, so keeping every pair
-    with dot_blas >= na·nb·(0.9 − 5e-10 − (n_t+8)·2⁻⁵³) − n_t·5e-13
-    (the +8 swallows the comparison's own few-ulp arithmetic) can only
-    drop pairs the exact filter provably drops. Survivor sets may
-    differ from the join-path pre-prune at the margin; outputs cannot.
+    products positive (tf >= 1, idf > 0), |dot_blas − dot_true| <=
+    (n_t+1)·2⁻⁵³·dot_true for ANY summation order, BLAS included, and
+    dot_true <= na·nb (Cauchy–Schwarz), while the exact path's only
+    other deviation is the per-product 12-dp quantization (n_t·5e-13
+    absolute in dot units). The output keeps pairs with round9(cos) >=
+    0.9, i.e. cos >= 0.9 − 5e-10, so keeping every pair with
+    dot_blas >= na·nb·(0.9 − 5e-10 − (n_t+8)·2⁻⁵³) − n_t·5e-13 (the +8
+    swallows the comparison's own few-ulp arithmetic) can only drop
+    pairs the exact filter provably drops. ``common`` is the exact
+    shared-term count n_t; ``na``/``nb`` are the exact norms."""
+    margin = float(threshold) - 5e-10
 
-    Driver transfer and broadcast are bounded by the _TFIDF_DENSE_MAX_*
-    box (<= cells rows, <= 8·cells bytes broadcast). Round-14 (r13
-    verdict item 5): the (doc, tid, w) rows cross as ONE Arrow frame
-    (``toPandas``; columnar, no per-row Python ``Row`` objects) and the
-    weight matrix is built by vectorized scatter — the old
-    ``collect()`` materialized O(cells) boxed Rows on the driver, which
-    at the old 48M-cell cap was multiple GB of Python objects for a
-    384 MB matrix. The cells cap drops 48M -> 16M (128 MB matrix,
-    ~0.4 GB transient Arrow frame — a driver-memory budget, not a
-    heap gamble); corpora between the caps now take the open-scale
-    prefix path, which is equally exact (both pre-prunes feed the
-    same exact-decimal verification)."""
-    import numpy as np
-    import pandas as pd
+    def keep(common, dot, na, nb):
+        nanb = na[:, None] * nb[None, :]
+        eps = 2.0 ** -53
+        return dot >= nanb * (margin - (common + 8.0) * eps) - common * 5e-13, None
 
-    id_type = w.schema["doc_id"].dataType.simpleString()
-    out_schema = f"a {id_type}, b {id_type}"
-    pdf = w.select("doc_id", "tid", "w").toPandas()  # Arrow, <= box cells
-    if pdf.empty:
-        return spark.createDataFrame([], out_schema)
-    doc_arr = pdf["doc_id"].to_numpy()
-    tid_arr = pdf["tid"].to_numpy()
-    ids_arr = np.unique(doc_arr)
-    tids_u = np.unique(tid_arr)
-    n, v = len(ids_arr), len(tids_u)
-    Wm = np.zeros((n, v), dtype=np.float64)
-    Wm[
-        np.searchsorted(ids_arr, doc_arr),
-        np.searchsorted(tids_u, tid_arr),
-    ] = pdf["w"].to_numpy()
-    ids = ids_arr.tolist()
-    idix = {d: i for i, d in enumerate(ids)}
-    nrm = np.ones(n, dtype=np.float64)
-    npdf = norms.toPandas()  # one row per doc — bounded with the box
-    for d, x in zip(npdf["doc_id"].to_numpy(), npdf["nrm"].to_numpy()):
-        i = idix.get(d)
-        if i is not None:
-            nrm[i] = x
-    bc = spark.sparkContext.broadcast((ids, Wm, nrm))
-    # per-task block: cap the unpacked block slice at ~32 MB of float64
-    block = max(128, min(2048, 4_000_000 // max(v, 1)))
-    nb = -(-n // block)
-    tasks = [(bi, bj) for bi in range(nb) for bj in range(bi, nb)]
-    eps = 2.0 ** -53
-
-    def score(batches):
-        ids_b, W_b, nrm_b = bc.value
-        idarr = np.asarray(ids_b)
-        nz = W_b != 0.0
-        for pdf in batches:
-            for bi, bj in zip(pdf["bi"], pdf["bj"]):
-                ra = slice(bi * block, min((bi + 1) * block, n))
-                rb = slice(bj * block, min((bj + 1) * block, n))
-                dot = W_b[ra] @ W_b[rb].T
-                # shared-term counts: float32 matmul of indicators is
-                # exact for counts < 2^24 (vocab is far below that)
-                nt = (
-                    nz[ra].astype(np.float32) @ nz[rb].astype(np.float32).T
-                ).astype(np.float64)
-                nanb = nrm_b[ra][:, None] * nrm_b[rb][None, :]
-                keep = dot >= nanb * (0.9 - 5e-10 - (nt + 8.0) * eps) - nt * 5e-13
-                if bi == bj:
-                    keep &= np.triu(np.ones(keep.shape, dtype=bool), k=1)
-                if keep.any():
-                    ai, bix = np.nonzero(keep)
-                    yield pd.DataFrame(
-                        {"a": idarr[ra][ai], "b": idarr[rb][bix]}
-                    )
-
-    par = spark.sparkContext.defaultParallelism
-    tasks_df = spark.createDataFrame(tasks, "bi int, bj int").repartition(
-        min(len(tasks), par * 2)
-    )
-    return tasks_df.mapInPandas(score, out_schema)
+    return keep
 
 
-def _tfidf_blocked_prune_survivors(
-    spark: SparkSession, w: DataFrame, norms: DataFrame
+def _tfidf_matmul_survivors(
+    spark: SparkSession, w: DataFrame, norms: DataFrame, executor: bool
 ) -> DataFrame:
-    """Executor-side blocked-matmul pre-prune for dense-shaped corpora
-    ABOVE the driver box (r14, r13 verdict item 4 + §2 of the guide:
-    replace the shared-term join explosion with block work, and never
-    materialize O(cells) on the driver).
-
-    Same mathematics as :func:`_tfidf_dense_prune_survivors` — float64
-    block dots, exact indicator-matmul shared-term counts (float32 below
-    a 2^24-term vocabulary, float64 from there), the
-    identical per-pair keep bound — so the SAME soundness argument
-    holds for any BLAS summation order (all products positive), and
-    survivors feed the unchanged exact-decimal verification: outputs
-    are identical whichever pre-prune ran. Differences are purely
-    physical: (a) per-block (rows x vocab) float64 slices are packed
-    executor-side by applyInPandas over a broadcast-joined block id —
-    the driver only ever holds the sorted doc-id / tid vocabularies
-    and the per-doc norms (O(n_docs + vocab) bytes); (b) block PAIRS
-    are formed by two shuffle joins of the tiny (B rows, fat blobs)
-    block table against the B(B+1)/2 pair index, one pair per
-    partition, and scored with one dgemm + one indicator dgemm each."""
+    """Sound candidate survivors ``(a, b)`` of the 0.9-cosine filter
+    from the block-pair scorer. The driver fetches the sorted doc ids
+    and norms either way; the driver layout also fetches the (doc, tid,
+    w) rows as ONE Arrow frame (<= _TFIDF_DENSE_MAX_CELLS rows) and
+    scatters them into the float64 matrix it broadcasts, while the
+    ``executor`` layout fetches only the sorted term ids."""
     import numpy as np
-    import pandas as pd
+
+    from ..operators.blockpairs import driver_block_pairs, executor_block_pairs
 
     id_type = w.schema["doc_id"].dataType.simpleString()
-    out_schema = f"a {id_type}, b {id_type}"
-    npdf = norms.select("doc_id", "nrm").toPandas()  # one row per doc
-    if npdf.empty:
-        return spark.createDataFrame([], out_schema)
-    order = np.argsort(npdf["doc_id"].to_numpy())
-    ids_arr = npdf["doc_id"].to_numpy()[order]
-    nrm = npdf["nrm"].to_numpy().astype(np.float64)[order]
-    tids_u = np.sort(
-        w.select("tid").distinct().toPandas()["tid"].to_numpy()
-    )
-    n, v = len(ids_arr), len(tids_u)
-    # same per-task slice budget as the driver path: ~32 MB of float64
-    block = max(128, min(4096, 4_000_000 // max(v, 1)))
-    nb = -(-n // block)
-    bc = spark.sparkContext.broadcast((ids_arr, tids_u, nrm, block, n, v))
-
-    # block assignment rides a broadcast-joined (doc_id, bi) map — n
-    # tiny rows, Arrow-created; deterministic (rank in the sorted ids)
-    bmap = spark.createDataFrame(
-        pd.DataFrame(
-            {"doc_id": ids_arr, "bi": (np.arange(n) // block).astype("int32")}
+    npdf = norms.select("doc_id", "nrm").toPandas().sort_values("doc_id")
+    ids = npdf["doc_id"].to_numpy()
+    nrm = npdf["nrm"].to_numpy().astype(np.float64)
+    if executor:
+        tids = np.sort(w.select("tid").distinct().toPandas()["tid"].to_numpy())
+        entries = w.select(
+            F.col("doc_id").alias("id"), F.col("tid").alias("col"), "w"
         )
-    )
-
-    def pack(key, pdf):
-        ids_b, tids_b, _, blk, n_b, v_b = bc.value
-        bi = int(key[0])
-        r0 = bi * blk
-        rows = (
-            np.searchsorted(ids_b, pdf["doc_id"].to_numpy()) - r0
+        return executor_block_pairs(
+            spark, entries, ids, tids, nrm, _tfidf_keep(0.9), id_type
         )
-        cols = np.searchsorted(tids_b, pdf["tid"].to_numpy())
-        m = np.zeros((min((bi + 1) * blk, n_b) - r0, v_b), dtype=np.float64)
-        m[rows, cols] = pdf["w"].to_numpy()
-        return pd.DataFrame({"bi": [bi], "m": [m.reshape(-1)]})
-
-    blocks = (
-        w.select("doc_id", "tid", "w")
-        .join(F.broadcast(bmap), "doc_id")
-        .groupBy("bi")
-        .applyInPandas(pack, "bi int, m array<double>")
-    )
-    pairs = spark.createDataFrame(
-        [(bi, bj) for bi in range(nb) for bj in range(bi, nb)],
-        "bi int, bj int",
-    )
-    joined = (
-        pairs.join(blocks.withColumnRenamed("m", "ma"), "bi")
-        .join(
-            blocks.withColumnRenamed("m", "mb").withColumnRenamed(
-                "bi", "bj"
-            ),
-            "bj",
-        )
-        # one fat row per partition: each row carries two block blobs,
-        # so batching several into one Arrow batch would multiply task
-        # memory for no win
-        .repartition(nb * (nb + 1) // 2)
-    )
-    eps = 2.0 ** -53
-
-    def score(batches):
-        ids_b, _, nrm_b, blk, n_b, v_b = bc.value
-        # the shared-term count is exact in float32 only below 2^24
-        ind = np.float32 if v_b < 1 << 24 else np.float64
-        for pdf in batches:
-            for bi, bj, ma, mb in zip(
-                pdf["bi"], pdf["bj"], pdf["ma"], pdf["mb"]
-            ):
-                A = np.asarray(ma, dtype=np.float64).reshape(-1, v_b)
-                B = np.asarray(mb, dtype=np.float64).reshape(-1, v_b)
-                ra = slice(bi * blk, bi * blk + A.shape[0])
-                rb = slice(bj * blk, bj * blk + B.shape[0])
-                dot = A @ B.T
-                nt = (
-                    (A != 0.0).astype(ind) @ (B != 0.0).astype(ind).T
-                ).astype(np.float64)
-                nanb = nrm_b[ra][:, None] * nrm_b[rb][None, :]
-                keep = (
-                    dot >= nanb * (0.9 - 5e-10 - (nt + 8.0) * eps)
-                    - nt * 5e-13
-                )
-                if bi == bj:
-                    keep &= np.triu(np.ones(keep.shape, dtype=bool), k=1)
-                if keep.any():
-                    ai, bix = np.nonzero(keep)
-                    yield pd.DataFrame(
-                        {
-                            "a": ids_b[ra][ai],
-                            "b": ids_b[rb][bix],
-                        }
-                    )
-
-    return joined.mapInPandas(score, out_schema)
+    pdf = w.select("doc_id", "tid", "w").toPandas()
+    tid_arr = pdf["tid"].to_numpy()
+    tids = np.unique(tid_arr)
+    mat = np.zeros((len(ids), len(tids)), dtype=np.float64)
+    mat[
+        np.searchsorted(ids, pdf["doc_id"].to_numpy()),
+        np.searchsorted(tids, tid_arr),
+    ] = pdf["w"].to_numpy()
+    return driver_block_pairs(spark, ids, mat, nrm, _tfidf_keep(0.9), id_type)
 
 
 def _tfidf_prefix_prune_survivors(
@@ -4124,12 +3940,6 @@ def _tfidf_prefix_prune_survivors(
         .repartition(n_par, "a", "b")
         .distinct()
     )
-    wa = w.select(
-        F.col("doc_id").alias("a"), "tid", F.col("w").alias("wa")
-    )
-    wb = w.select(
-        F.col("doc_id").alias("b"), "tid", F.col("w").alias("wb")
-    )
     # both verify sides BROADCAST (the (doc,term,w) table is ~100k
     # rows at sf0.1): the candidate explosion to shared-term rows and
     # its partial aggregation stay map-side; the only data-scaled
@@ -4150,27 +3960,14 @@ def _tfidf_prefix_prune_survivors(
     # verification then runs on the survivors alone (32.5k pairs at
     # sf0.1 — a 380x reduction, measured by the DuckDB replay).
     #
-    # SOUNDNESS (no pair the exact path would emit can be pruned):
-    # every product wa*wb is POSITIVE (tf >= 1; idf = (N-df+.5)/(df+.5)
-    # > 0), so the double sum's relative error is <= (n_t+1)*2^-53
-    # with condition number 1 (no cancellation), and the exact path's
-    # only other deviation is the per-product 12-dp quantization,
-    # |round12(p) - p| <= 5e-13 per shared term. With the EXACT norms
-    # (same checkpointed table both paths) the per-pair error bound is
-    #   |cos_d - cos_exact| <= (n_t+8)*2^-53 + n_t*5e-13/(na*nb),
-    # computed per pair from the shared-term count n_t (r14, ADVICE:
-    # the old fixed 1e-12 slack only covered (n_t+1)*2^-53 while
-    # n_t < ~9000 — pairs of very long documents past that could be
-    # wrongly pruned; the per-pair form mirrors the dense path's keep
-    # bound and is sound for ANY n_t, the +8 swallowing the
-    # comparison's own few-ulp arithmetic). The output condition
-    # round(cos,9) >= 0.9 means cos_exact >= 0.9 - 5e-10, so pruning
-    # at  cos_d >= 0.9 - 5e-10 - bound  can only drop pairs the exact
-    # filter would drop too; survivors feed the unchanged exact-
-    # decimal verification, so the output is identical either way.
+    # SOUNDNESS: the filter is :func:`_tfidf_keep`'s per-pair bound in
+    # cosine units, cos_d >= 0.9 - 5e-10 - (n_t+8)*2^-53 -
+    # n_t*5e-13/(na*nb), with the EXACT norms (the same checkpointed
+    # table both paths read); its argument holds for any summation
+    # order, this aggregation's included, and for ANY n_t.
     dots_d = (
-        cand.join(F.broadcast(wa), "a")
-        .join(F.broadcast(wb), ["b", "tid"])
+        cand.join(F.broadcast(wa_frame(w)), "a")
+        .join(F.broadcast(wb_frame(w)), ["b", "tid"])
         .groupBy("a", "b")
         .agg(
             F.sum(F.col("wa") * F.col("wb")).alias("dot_d"),
@@ -4178,18 +3975,7 @@ def _tfidf_prefix_prune_survivors(
         )
     )
     return (
-        dots_d.join(
-            F.broadcast(norms.select(
-                F.col("doc_id").alias("a"), F.col("nrm").alias("na")
-            )),
-            "a",
-        )
-        .join(
-            F.broadcast(norms.select(
-                F.col("doc_id").alias("b"), F.col("nrm").alias("nb")
-            )),
-            "b",
-        )
+        _with_norms(dots_d, norms)
         .filter(
             F.col("dot_d") / (F.col("na") * F.col("nb"))
             >= F.lit(0.9 - 5e-10)

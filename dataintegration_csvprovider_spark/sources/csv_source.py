@@ -91,7 +91,7 @@ class CsvSourceOptions:
             "quote": self.quote,
             "escape": self.quote,  # escape == quote (CSVSourceReader.cs:49-51)
             "header": str(self.first_row_contains_column_names).lower(),
-            "encoding": ENCODINGS.get(self.encoding, self.encoding),
+            "encoding": enc,
             "nullValue": self.null_sentinel,
             "ignoreLeadingWhiteSpace": str(self.trim).lower(),
             "ignoreTrailingWhiteSpace": str(self.trim).lower(),
@@ -344,20 +344,11 @@ class CsvSource:
             overridden = schema is not None
         if schema is None:
             schema = self._infer_table(spark, table)
-        enc = ENCODINGS.get(self.options.encoding, self.options.encoding)
-        if enc.lower() not in ("utf-8", "us-ascii", "iso-8859-1", "utf-16",
-                               "utf-16be", "utf-16le", "utf-32"):
-            # cp1252/cp1251 need the legacy charset gate; runtime-settable,
-            # so sessions not built by our factory still work
-            spark.conf.set("spark.sql.legacy.javaCharsets", "true")
-        opts = self.options.spark_read_options()
-        if overridden:
-            # an edited/explicit schema binds by ordinal and its names are
-            # ALLOWED to differ from the file header (that is the point of
-            # the override) — disable Spark's header-name validation
-            opts["enforceSchema"] = "true"
-        reader = spark.read.options(**opts)
-        df = reader.schema(schema).csv(path)
+        # an edited/explicit schema binds by ordinal and its names are
+        # ALLOWED to differ from the file header (that is the point of
+        # the override) — disable Spark's header-name validation
+        override = {"enforceSchema": "true"} if overridden else {}
+        df = self._scan(spark, schema, **override).csv(path)
         if self.options.first_row_contains_column_names:
             # Spark binds header names; we bind by schema ordinal to stay
             # faithful to positional access (CSVSourceReader.cs:221,227)
@@ -369,12 +360,23 @@ class CsvSource:
         ``_corrupt_record`` — the audit-trail variant of E1 (the reference
         logs field + raw record, CSVSourceReader.cs:64-68)."""
         schema = self._infer_table(spark, table).add("_corrupt_record", T.StringType())
-        opts = self.options.spark_read_options() | {
-            "mode": "PERMISSIVE",
-            "columnNameOfCorruptRecord": "_corrupt_record",
-        }
-        df = spark.read.options(**opts).schema(schema).csv(self.path_for_table(table))
-        return df
+        audit = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"}
+        return self._scan(spark, schema, **audit).csv(self.path_for_table(table))
+
+    def _scan(
+        self, spark: SparkSession, schema: T.StructType, stream=False, **overrides
+    ):
+        """The one way this source sets up a Spark CSV reader, batch or
+        (``stream``) streaming: its dialect options plus ``overrides``,
+        and ``schema``; the caller names the path."""
+        opts = self.options.spark_read_options() | overrides
+        if opts["encoding"].lower() not in ("utf-8", "us-ascii", "iso-8859-1", "utf-16",
+                                            "utf-16be", "utf-16le", "utf-32"):
+            # cp1252/cp1251 need the legacy charset gate; runtime-settable,
+            # so sessions not built by our factory still work
+            spark.conf.set("spark.sql.legacy.javaCharsets", "true")
+        reader = spark.readStream if stream else spark.read
+        return reader.options(**opts).schema(schema)
 
     # -- J4 programmatic source injection (CSVProvider.cs:702-717) ---------
     def write_to_source_file(self, text: str) -> str:

@@ -50,11 +50,7 @@ def stream_from_csv_source(
         # same-named drops (events.csv, events_2.csv, ...) flowing in
         root, _ = os.path.splitext(path)
         path = f"{root}*.csv"
-    return (
-        spark.readStream.options(**source.options.spark_read_options())
-        .schema(schema)
-        .csv(path)
-    )
+    return source._scan(spark, schema, stream=True).csv(path)
 
 
 def tumbling_agg(

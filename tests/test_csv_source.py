@@ -197,6 +197,29 @@ def test_encoding_variants(spark, tmp_path):
         assert (r.a, r.b) == ("café", "naïve"), enc_label
 
 
+def test_audit_read_sets_legacy_charset_gate(spark, tmp_path):
+    # a session without the legacy charset gate (a plain builder's
+    # default) must still audit-read a Windows-1252 table: every reader
+    # of the source sets the gate for a legacy charset, not only read()
+    key = "spark.sql.legacy.javaCharsets"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        (tmp_path / "t.csv").write_text(
+            "a;b\ncafé;naïve\nonlyone\n", encoding="cp1252"
+        )
+        src = CsvSource(
+            folder=str(tmp_path), options=CsvSourceOptions(encoding="Windows-1252")
+        )
+        rows = src.read_with_audit(spark, "t").collect()
+    finally:
+        spark.conf.set(key, saved)
+    assert [(r.a, r.b) for r in rows if r["_corrupt_record"] is None] == [
+        ("café", "naïve")
+    ]
+    assert [r["_corrupt_record"] for r in rows if r["_corrupt_record"]] == ["onlyone"]
+
+
 def test_utf8_bom_header_not_polluted(spark, tmp_path):
     # Python's utf-8 codec keeps U+FEFF; the header inspector must strip
     # it or the first column is named '﻿"id' with broken quoting

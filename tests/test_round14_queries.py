@@ -63,25 +63,47 @@ def test_dsum_davg_no_raise_path_in_plan(spark):
     assert "raise_error" not in plan, plan
 
 
-def test_tfidf_blocked_prune_output_identical(spark):
-    """r13 verdict item 4: the executor-side blocked-matmul pre-prune
-    (dense-shaped corpora above the driver box) must yield the same
-    FINAL query output as the driver-dense path — survivor sets may
-    differ at the float margin (different BLAS orders), outputs cannot
-    (both feed the unchanged exact-decimal verification)."""
+def test_tfidf_blocked_prune_output_identical(spark, monkeypatch):
+    """All three tf-idf pre-prunes yield the same FINAL query output: the
+    block-pair scorer's driver layout (the fixture's own route), its
+    executor layout (driver cells cap 0) and the AllPairs prefix path
+    (both cells caps 0). Survivor sets may differ at the float margin
+    (different summation orders); outputs cannot, since every pre-prune
+    feeds the unchanged exact-decimal verification."""
     import dataintegration_csvprovider_spark.queries.llm as llm
 
     sf = "/root/testdata/sf0.01"
-    base = sorted(map(tuple, llm.q_tfidf_cosine_pairs(spark, sf).collect()))
-    saved = llm._TFIDF_DENSE_MAX_CELLS
-    try:
-        llm._TFIDF_DENSE_MAX_CELLS = 0  # force the blocked branch
-        blocked = sorted(
-            map(tuple, llm.q_tfidf_cosine_pairs(spark, sf).collect())
+    routes = []
+    for name in ("_tfidf_matmul_survivors", "_tfidf_prefix_prune_survivors"):
+        fn = getattr(llm, name)
+
+        def traced(*args, _fn=fn, _name=name, **kwargs):
+            routes.append((_name, kwargs.get("executor")))
+            return _fn(*args, **kwargs)
+
+        monkeypatch.setattr(llm, name, traced)
+
+    def run(driver_cells: int, block_cells: int) -> list:
+        saved = llm._TFIDF_DENSE_MAX_CELLS, llm._TFIDF_BLOCK_MAX_CELLS
+        llm._TFIDF_DENSE_MAX_CELLS, llm._TFIDF_BLOCK_MAX_CELLS = (
+            driver_cells, block_cells
         )
-    finally:
-        llm._TFIDF_DENSE_MAX_CELLS = saved
-    assert base and base == blocked
+        try:
+            return sorted(
+                map(tuple, llm.q_tfidf_cosine_pairs(spark, sf).collect())
+            )
+        finally:
+            llm._TFIDF_DENSE_MAX_CELLS, llm._TFIDF_BLOCK_MAX_CELLS = saved
+
+    driver = run(llm._TFIDF_DENSE_MAX_CELLS, llm._TFIDF_BLOCK_MAX_CELLS)
+    executor = run(0, llm._TFIDF_BLOCK_MAX_CELLS)
+    prefix = run(0, 0)
+    assert routes == [
+        ("_tfidf_matmul_survivors", False),
+        ("_tfidf_matmul_survivors", True),
+        ("_tfidf_prefix_prune_survivors", None),
+    ]
+    assert driver and driver == executor == prefix
 
 
 def test_covariance_exact_component_reuse_bit_identical(spark):
