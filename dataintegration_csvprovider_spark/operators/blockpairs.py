@@ -40,18 +40,12 @@ Two physical layouts; the caller's size boxes pick one:
 
 from __future__ import annotations
 
-import sys
 from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-# the task closures call this module's kernel: ship its functions by
-# value, so a Python worker that cannot import the package runs them
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 #: a block's dense slice holds at most this many cells (32 MB of float64)
 BLOCK_CELLS = 4_000_000

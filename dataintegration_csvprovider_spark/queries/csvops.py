@@ -33,15 +33,12 @@ def _roundtrip(spark: SparkSession, df: DataFrame, table: str,
     small fixture-scale roundtrips; at production scale the sink writes
     to a durable destination, not a temp dir).
     """
-    import shutil
-
-    d = tempfile.mkdtemp(prefix=f"csvops_{table}_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix=f"csvops_{table}_", ignore_cleanup_errors=True
+    ) as d:
         CsvSink(folder=d).write(df, table)
         src = CsvSource(folder=d, options=src_options or CsvSourceOptions())
         return src.read(spark, table).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -165,11 +162,10 @@ def q_csv_dialects(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     supplier = load_table(spark, sf_dir, "supplier")
     out = []
-    import shutil
-
     for dialect, sep, quote in [("tab", "\t", "'"), ("comma", ",", '"')]:
-        d = tempfile.mkdtemp(prefix=f"dialect_{dialect}_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix=f"dialect_{dialect}_", ignore_cleanup_errors=True
+        ) as d:
             CsvSink(
                 folder=d, options=CsvSinkOptions(delimiter=sep, quote=quote)
             ).write(supplier, "supplier")
@@ -185,8 +181,6 @@ def q_csv_dialects(spark: SparkSession, sf_dir: str) -> DataFrame:
                     dsum(F.col("s_acctbal")).alias("total"),
                 ).localCheckpoint(eager=True)
             )
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
     return out[0].unionByName(out[1])
 
 
@@ -239,10 +233,9 @@ def q_text_source_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value"),
         ).alias("value")
     )
-    import shutil
-
-    d = tempfile.mkdtemp(prefix="text_logs_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="text_logs_", ignore_cleanup_errors=True
+    ) as d:
         lines.write.mode("overwrite").text(d)
         raw = spark.read.text(d)
         pat = r"^([^|]*)\|([^|]*)\|([^|]*)\|(.*)$"
@@ -263,8 +256,6 @@ def q_text_source_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -365,10 +356,9 @@ def q_csv_culture_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", F.col("c_acctbal").cast("decimal(18,2)").alias("c_acctbal")
     )
-    import shutil
-
-    d = tempfile.mkdtemp(prefix="csvops_culture_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="csvops_culture_", ignore_cleanup_errors=True
+    ) as d:
         CsvSink(folder=d, options=CsvSinkOptions(culture="da-DK")).write(
             cust, "customer_dk"
         )
@@ -379,8 +369,6 @@ def q_csv_culture_render(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_custkey").cast("bigint").alias("custkey"),
             F.col("c_acctbal").alias("acctbal_dk"),
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -401,14 +389,17 @@ def q_csv_culture_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("csv", "xml", "jobs"),
 )
 def q_xml_jobspec_import(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from ..jobs import run_job
     from ..xml_settings import jobspec_from_xml
 
-    src_dir = tempfile.mkdtemp(prefix="xmljob_src_")
-    dst_dir = tempfile.mkdtemp(prefix="xmljob_dst_")
-    try:
+    with (
+        tempfile.TemporaryDirectory(
+            prefix="xmljob_src_", ignore_cleanup_errors=True
+        ) as src_dir,
+        tempfile.TemporaryDirectory(
+            prefix="xmljob_dst_", ignore_cleanup_errors=True
+        ) as dst_dir,
+    ):
         nation = load_table(spark, sf_dir, "nation")
         # land the source as a reference-dialect CSV file
         CsvSink(folder=src_dir).write(nation, "nation")
@@ -454,9 +445,6 @@ def q_xml_jobspec_import(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nation_name",
             "origin",
         )
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(dst_dir, ignore_errors=True)
 
 
 @register(
@@ -481,10 +469,10 @@ def q_xml_jobspec_import(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_csv_defective_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
-    d = tempfile.mkdtemp(prefix="defective_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="defective_", ignore_cleanup_errors=True
+    ) as d:
         with open(os.path.join(d, "items.csv"), "w", encoding="utf-8") as fh:
             fh.write(
                 "id;value\n"
@@ -508,8 +496,6 @@ def q_csv_defective_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("_corrupt_record").isNotNull())
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
     kept = good.agg(
         F.lit("kept").alias("bucket"),
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -544,14 +530,17 @@ def q_csv_defective_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("csv", "errors", "jobs"),
 )
 def q_job_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from ..jobs import JobSpec, run_job
     from ..sinks.csv_sink import CsvSink
 
-    src_dir = tempfile.mkdtemp(prefix="joberr_src_")
-    dst_dir = tempfile.mkdtemp(prefix="joberr_dst_")
-    try:
+    with (
+        tempfile.TemporaryDirectory(
+            prefix="joberr_src_", ignore_cleanup_errors=True
+        ) as src_dir,
+        tempfile.TemporaryDirectory(
+            prefix="joberr_dst_", ignore_cleanup_errors=True
+        ) as dst_dir,
+    ):
         region = load_table(spark, sf_dir, "region")
         CsvSink(folder=src_dir).write(region, "region")
         job = JobSpec(
@@ -576,9 +565,6 @@ def q_job_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         result = run_job(spark, job)
         back = CsvSource(folder=dst_dir).read(spark, "region_out")
         n_written = back.count()
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(dst_dir, ignore_errors=True)
     return spark.createDataFrame(
         [
             (
@@ -616,10 +602,10 @@ def q_job_error_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_csv_fidelity_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
 
-    d = tempfile.mkdtemp(prefix="fidelity_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="fidelity_", ignore_cleanup_errors=True
+    ) as d:
         # folder table 'items' has 2 rows; the SELECTED file has 3 —
         # reading table 'items' through a file-selected source must see 3
         with open(os.path.join(d, "items.csv"), "w", encoding="utf-8") as fh:
@@ -645,8 +631,6 @@ def q_csv_fidelity_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
         deleted = src_del.delete_source_files()
         remaining = [p for p in os.listdir(d) if p.endswith(".csv")]
         sources_deleted = bool(len(deleted) == 3 and not remaining)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame(
         [
             ("file_overrides_folder", file_overrides),
@@ -719,8 +703,6 @@ def q_csv_script_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("csv", "encoding"),
 )
 def q_csv_encoding_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     samples = {
         "UTF-8": "café naïve jalapeño",
         "windows-1252": "café naïve jalapeño",
@@ -729,8 +711,9 @@ def q_csv_encoding_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     rows = []
     for enc, text in samples.items():
-        d = tempfile.mkdtemp(prefix="encrt_")
-        try:
+        with tempfile.TemporaryDirectory(
+            prefix="encrt_", ignore_cleanup_errors=True
+        ) as d:
             src_df = spark.createDataFrame([(1, text)], "id string, txt string")
             from ..sinks.csv_sink import CsvSinkOptions
 
@@ -742,8 +725,6 @@ def q_csv_encoding_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).read(spark, "t").collect()
             got = back[0]["txt"] if back else None
             rows.append((enc, text, got == text))
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame(
         rows, "encoding string, sample_text string, roundtrip_ok boolean"
     )
@@ -770,12 +751,12 @@ def q_csv_encoding_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_csv_timestamp_filename(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import re
-    import shutil
 
     from ..sinks.csv_sink import CsvSinkOptions
 
-    d = tempfile.mkdtemp(prefix="tsname_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="tsname_", ignore_cleanup_errors=True
+    ) as d:
         region = load_table(spark, sf_dir, "region")
         CsvSink(
             folder=d, options=CsvSinkOptions(include_timestamp_in_filename=True)
@@ -798,8 +779,6 @@ def q_csv_timestamp_filename(spark: SparkSession, sf_dir: str) -> DataFrame:
             if csvs
             else -1
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame(
         [(bool(shape), bool(single), int(n_back))],
         "filename_shape_ok boolean, single_file_ok boolean, rows_back bigint",

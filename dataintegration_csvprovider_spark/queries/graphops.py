@@ -584,17 +584,14 @@ def q_pagerank_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_components_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-    import shutil
     import tempfile
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from ..operators.components import incremental_components
     from ..operators.sketches import (
         table_ledger_commit,
         table_ledger_read,
     )
+    from ..streaming.events import run_batches, slice_stream, stage_slices
 
     orders = load_table(spark, sf_dir, "orders")
     src = (F.col("o_custkey") % 1000).cast("bigint")
@@ -606,41 +603,20 @@ def q_stream_components_incremental(
         ).cast("bigint").alias("dst"),
     ).distinct()
 
-    stage = tempfile.mkdtemp(prefix="cc_stage_")
-    roots = [tempfile.mkdtemp(prefix="cc_run_") for _ in range(2)]
-    protocols = {roots[0]: "manifest", roots[1]: "listing"}
+    # the crashed run rides the manifest protocol, the control the listing
+    protocols = {"run0": "manifest", "run1": "listing"}
+    skipped: dict[str, list[int]] = {r: [] for r in protocols}
 
-    def write_slice(df: DataFrame, name: str, mtime: int) -> None:
-        tmp = tempfile.mkdtemp(prefix="cc_part_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in os.listdir(tmp)
-            if p.endswith(".parquet") and not p.startswith("_")
-        )
-        dst = f"{stage}/{name}"
-        shutil.move(f"{tmp}/{part}", dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dst, (mtime, mtime))
-
-    skipped: dict[str, list[int]] = {r: [] for r in roots}
-
-    def run_stream(root: str, crash_in_batch: int | None) -> None:
-        proto = protocols[root]
-        schema = spark.read.parquet(stage).schema
-        feed = (
-            spark.readStream.format("parquet")
-            .schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .load(stage)
-        )
+    def run_stream(run: str, crash_in_batch: int | None) -> None:
+        proto = protocols[run]
 
         def merge_batch(bdf: DataFrame, batch_id: int) -> None:
-            ledger = f"{root}/labels"
+            ledger = f"{tmp}/{run}/labels"
             labels, applied = table_ledger_read(
                 spark, ledger, protocol=proto
             )
             if batch_id <= applied:
-                skipped[root].append(batch_id)
+                skipped[run].append(batch_id)
                 return
             new_labels = incremental_components(labels, bdf)
             table_ledger_commit(
@@ -652,59 +628,47 @@ def q_stream_components_incremental(
             if batch_id == crash_in_batch:
                 raise RuntimeError("injected crash after table commit")
 
-        q = (
-            feed.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{root}/ck")
-            .trigger(availableNow=True)
-            .start()
+        run_batches(
+            slice_stream(spark, stage, schema), f"{tmp}/{run}/ck",
+            merge_batch, crash_injected=crash_in_batch is not None,
         )
-        try:
-            q.awaitTermination()
-        except StreamingQueryException:
-            if crash_in_batch is None:
-                raise
 
-    try:
-        write_slice(
-            edges.filter((F.col("src") + F.col("dst")) % 2 == 0),
-            "a.parquet", 1_000_000_000,
-        )
-        write_slice(
-            edges.filter((F.col("src") + F.col("dst")) % 2 == 1),
-            "b.parquet", 1_000_010_000,
-        )
-        run_stream(roots[0], crash_in_batch=0)
-        run_stream(roots[0], crash_in_batch=None)
-        run_stream(roots[1], crash_in_batch=None)
+    with tempfile.TemporaryDirectory(
+        prefix="cc_", ignore_cleanup_errors=True
+    ) as tmp:
+        stage = f"{tmp}/stage"
+        schema = stage_slices(stage, [
+            ("a.parquet",
+             edges.filter((F.col("src") + F.col("dst")) % 2 == 0)),
+            ("b.parquet",
+             edges.filter((F.col("src") + F.col("dst")) % 2 == 1)),
+        ])
+        run_stream("run0", crash_in_batch=0)
+        run_stream("run0", crash_in_batch=None)
+        run_stream("run1", crash_in_batch=None)
 
         finals = {}
-        for root in roots:
+        for run, proto in protocols.items():
             df, gen = table_ledger_read(
-                spark, f"{root}/labels", protocol=protocols[root]
+                spark, f"{tmp}/{run}/labels", protocol=proto
             )
-            finals[root] = (
+            finals[run] = (
                 sorted(
                     (int(r["node"]), int(r["component"]))
                     for r in df.collect()
                 ),
                 gen,
             )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
 
-    try:
-        restart_equal = bool(finals[roots[0]] == finals[roots[1]])
-        redelivery_refused = bool(
-            skipped[roots[0]] == [0] and skipped[roots[1]] == []
-        )
-        return spark.createDataFrame(
-            [
-                (n, c, restart_equal, redelivery_refused)
-                for n, c in finals[roots[0]][0]
-            ],
-            "node long, component long, restart_equal boolean, "
-            "redelivery_refused boolean",
-        )
-    finally:
-        for r in roots:
-            shutil.rmtree(r, ignore_errors=True)
+    restart_equal = bool(finals["run0"] == finals["run1"])
+    redelivery_refused = bool(
+        skipped["run0"] == [0] and skipped["run1"] == []
+    )
+    return spark.createDataFrame(
+        [
+            (n, c, restart_equal, redelivery_refused)
+            for n, c in finals["run0"][0]
+        ],
+        "node long, component long, restart_equal boolean, "
+        "redelivery_refused boolean",
+    )

@@ -25,10 +25,9 @@ from .registry import dsum, register, sql_dsum
 def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
     sample = docs.select("doc_id", "lang", "n_chars")
-    import shutil
-
-    d = tempfile.mkdtemp(prefix="jsonl_rt_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="jsonl_rt_", ignore_cleanup_errors=True
+    ) as d:
         JsonlSink(folder=d).write(sample, "documents")
         back = JsonlSource(folder=d).read(
             spark, "documents", schema=sample.schema
@@ -36,8 +35,6 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         return back.select("doc_id", "lang", "n_chars").localCheckpoint(
             eager=True
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -55,10 +52,9 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_jsonl_skip_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
     sample = docs.select("doc_id", "lang", "n_chars")
-    import shutil
-
-    d = tempfile.mkdtemp(prefix="jsonl_bad_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="jsonl_bad_", ignore_cleanup_errors=True
+    ) as d:
         path = JsonlSink(folder=d).write(sample, "documents")
         with open(path, "a", encoding="utf-8") as fh:
             fh.write('{"doc_id": broken,,,\n')
@@ -74,5 +70,3 @@ def q_jsonl_skip_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

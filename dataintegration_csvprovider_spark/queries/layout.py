@@ -18,7 +18,6 @@ are the Spark-native generalization of that file-per-unit model.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,8 +68,9 @@ def _has_dynamic_pruning(df: DataFrame) -> bool:
 )
 def q_partition_prune_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    d = tempfile.mkdtemp(prefix="layout_static_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="layout_static_", ignore_cleanup_errors=True
+    ) as d:
         ev.write.mode("overwrite").partitionBy("event_type").parquet(f"{d}/fact")
         pruned = spark.read.parquet(f"{d}/fact").filter(
             F.col("event_type") == "click"
@@ -85,8 +85,6 @@ def q_partition_prune_static(spark: SparkSession, sf_dir: str) -> DataFrame:
             # materialize before the temp dir vanishes
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -111,8 +109,9 @@ def q_partition_prune_static(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_partition_prune_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    d = tempfile.mkdtemp(prefix="layout_dpp_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="layout_dpp_", ignore_cleanup_errors=True
+    ) as d:
         ev.write.mode("overwrite").partitionBy("event_type").parquet(f"{d}/fact")
         fact = spark.read.parquet(f"{d}/fact")
         dim = (
@@ -131,8 +130,6 @@ def q_partition_prune_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         ok = _has_dynamic_pruning(agg)
         return agg.withColumn("dpp_used", F.lit(ok)).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -153,8 +150,9 @@ def q_partition_prune_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    d = tempfile.mkdtemp(prefix="layout_compact_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="layout_compact_", ignore_cleanup_errors=True
+    ) as d:
         # fragment: force a wide shuffle before writing
         ev.repartition(32).write.mode("overwrite").parquet(f"{d}/small")
         small = spark.read.parquet(f"{d}/small")
@@ -169,8 +167,6 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def _zorder_value(a, b, bits: int = 20):
@@ -248,8 +244,9 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         scaled("l_orderkey", "omin", "omax").cast("bigint"),
         scaled("l_partkey", "pmin", "pmax").cast("bigint"),
     )
-    d = tempfile.mkdtemp(prefix="layout_zorder_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="layout_zorder_", ignore_cleanup_errors=True
+    ) as d:
         (
             with_b.repartitionByRange(16, F.col("l_orderkey"))
             .sortWithinPartitions("l_orderkey")
@@ -294,8 +291,6 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("zorder_skips_half", F.lit(z_scan <= z_total // 2))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 def _scan_read_columns(df: DataFrame) -> list[str]:
@@ -407,8 +402,9 @@ def q_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     li = load_table(spark, sf_dir, "lineitem")
-    d = tempfile.mkdtemp(prefix="codec_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="codec_", ignore_cleanup_errors=True
+    ) as d:
         for codec in ("snappy", "zstd"):
             li.coalesce(1).write.mode("overwrite").option(
                 "compression", codec
@@ -444,5 +440,3 @@ def q_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

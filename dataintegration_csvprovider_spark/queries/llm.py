@@ -4439,7 +4439,6 @@ def q_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "packing", "sink"),
 )
 def q_training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from ..sinks.shards import write_training_shards
@@ -4453,13 +4452,12 @@ def q_training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).cast("bigint").alias("n_tokens"),
     )
-    d = tempfile.mkdtemp(prefix="shards_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="shards_", ignore_cleanup_errors=True
+    ) as d:
         manifest = write_training_shards(
             toks, d, n_shards=8, order_col="doc_id", weight_col="n_tokens"
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
     return manifest
 
 
@@ -4826,7 +4824,6 @@ def q_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "pq", "tokenizer", "artifacts"),
 )
 def q_artifact_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
     import tempfile
 
     from ..operators.artifacts import (
@@ -4843,8 +4840,9 @@ def q_artifact_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents").limit(100)
-    d = tempfile.mkdtemp(prefix="artifacts_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="artifacts_", ignore_cleanup_errors=True
+    ) as d:
         # IVF centroids: save/load + identical pair set through the
         # snapshot path
         cents = trained_ivf_centroids(emb, k=16).localCheckpoint(eager=False)
@@ -4887,8 +4885,6 @@ def q_artifact_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
             r.doc_id: r.n_bpe for r in bpe_token_counts(docs, back_m).collect()
         }
         counts_same = fresh_counts == reload_counts
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
     return spark.createDataFrame(
         [
             (

@@ -222,11 +222,10 @@ def q_drift_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "orc"),
 )
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 1000)
-    d = tempfile.mkdtemp(prefix="orc_rt_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="orc_rt_", ignore_cleanup_errors=True
+    ) as d:
         li.write.mode("overwrite").orc(d)
         back = spark.read.orc(d)
         # Eagerly materialize the small aggregate so the temp dir can be
@@ -239,8 +238,6 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -513,15 +510,14 @@ def q_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "xml"),
 )
 def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") < 2000)
         .select("event_id", "event_type", "value")
     )
-    d = tempfile.mkdtemp(prefix="xml_rt_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="xml_rt_", ignore_cleanup_errors=True
+    ) as d:
         ev.write.format("xml").option("rootTag", "events").option(
             "rowTag", "event"
         ).mode("overwrite").save(d)
@@ -537,5 +533,3 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

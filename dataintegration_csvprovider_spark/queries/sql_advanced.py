@@ -156,10 +156,9 @@ def q_join_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    import shutil
-
-    d = tempfile.mkdtemp(prefix="schema_evo_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="schema_evo_", ignore_cleanup_errors=True
+    ) as d:
         old = orders.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_totalprice"
         )
@@ -179,8 +178,6 @@ def q_parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @register(
@@ -264,11 +261,10 @@ _SUM_QTY = sql_dsum("l_quantity")
     tags=("source", "orc", "format", "pushdown"),
 )
 def q_orc_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     li = load_table(spark, sf_dir, "lineitem")
-    d = tempfile.mkdtemp(prefix="orc_pd_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="orc_pd_", ignore_cleanup_errors=True
+    ) as d:
         li.write.mode("overwrite").orc(d)
         back = spark.read.orc(d)
         filtered = back.filter(F.col("l_shipdate") >= F.lit("1995-01-01"))
@@ -288,5 +284,3 @@ def q_orc_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         return agg.select(
             "*", F.lit(bool(pushed)).alias("filter_pushed")
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

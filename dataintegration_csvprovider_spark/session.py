@@ -77,8 +77,12 @@ def get_spark(
     to ``local[$SPARK_GRAFT_CPUS]`` and size shuffle partitions to the core
     count (the stock 200 over-parallelizes small data and under-parallelizes
     100 TB — at scale callers pass an explicit value or rely on AQE
-    coalescing from a high initial number). A launch of the driver JVM
-    uses the class-data-sharing archive described in the module docstring.
+    coalescing from a high initial number). The driver heap is
+    ``spark.driver.memory`` from ``extra_conf``, else
+    ``$SPARK_GRAFT_DRIVER_MEM``, else half of physical memory up to 24g.
+    Python workers get the package's parent directory on their path. A
+    launch of the driver JVM uses the class-data-sharing archive described
+    in the module docstring.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     if master is None:
@@ -86,7 +90,11 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else 32
     extra_conf = extra_conf or {}
-    memory = extra_conf.get("spark.driver.memory") or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    memory = (
+        extra_conf.get("spark.driver.memory")
+        or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or _default_heap(_physical_memory())
+    )
 
     builder = (
         SparkSession.builder.master(master)
@@ -124,6 +132,10 @@ def get_spark(
         # this is the whole engine's heap: 8g put the 30× dedup probe's
         # shuffle stage into GCLocker/OOM territory on a 128 GiB box
         .config("spark.driver.memory", memory)
+        # Python workers import the package's UDF and mapInPandas
+        # closures by reference, so they need it on their path whatever
+        # the working directory (on a cluster: addPyFile a zip of it)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
@@ -138,6 +150,33 @@ def get_spark(
             launch.dump.publish_at_exit(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: the directory that holds the package, for the Python workers' path
+_PACKAGE_PARENT = str(Path(__file__).resolve().parent.parent)
+#: the default heap never exceeds this, whatever the host has
+_MAX_DEFAULT_HEAP_GIB = 24
+
+
+def _physical_memory() -> int | None:
+    """Bytes of physical memory, or ``None`` where ``sysconf`` cannot
+    tell."""
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return None
+
+
+def _default_heap(physical: int | None) -> str:
+    """The driver heap when neither the caller nor
+    ``SPARK_GRAFT_DRIVER_MEM`` sets one: half of physical memory in whole
+    GiB, at least 1g and at most 24g (24g where the size is unknown). A
+    heap that outgrows the host then fails inside the JVM with a Java
+    error instead of the kernel killing the process; staying under 32 GiB
+    keeps the archive key's compressed-pointer side."""
+    if not physical:
+        return f"{_MAX_DEFAULT_HEAP_GIB}g"
+    return f"{max(1, min(_MAX_DEFAULT_HEAP_GIB, physical // 2 >> 30))}g"
 
 
 #: JVM flags that choose class-data sharing; a caller who sets any of

@@ -11,16 +11,31 @@ Every op is built-in Structured Streaming — no custom state stores. For
 deterministic testing the driver runs a stream to completion with an
 ``availableNow`` trigger into a memory sink (one batch, same results as
 batch semantics for complete-mode aggs).
+
+A query that needs a fixed micro-batch schedule uses one harness:
+:func:`stage_slices` writes each slice as one parquet file whose mtime
+fixes its place in the listing, :func:`slice_stream` reads the staged
+files as a file-source stream, one per micro-batch, and
+:func:`run_batches` drives a stream into a ``foreachBatch`` callback
+under a checkpoint. Temporary directories follow two rules. A
+query-scoped directory is a ``tempfile.TemporaryDirectory`` block, and a
+result that would read from it is materialized first. What must outlive
+the query (the staged events, an append-mode sink read back lazily) lives
+under :func:`scratch_root`, which one ``atexit`` removes.
 """
 
 from __future__ import annotations
 
 import atexit
+import functools
 import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,6 +43,88 @@ from ..queries.registry import dsum
 from pyspark.sql import types as T
 
 from ..sources.csv_source import CsvSource
+
+#: the i-th file staged in a directory gets mtime 1_000_000_000 +
+#: 10_000·i, so the file source lists the slices in staging order
+_SLICE_MTIME0, _SLICE_MTIME_STEP = 1_000_000_000, 10_000
+
+
+@functools.cache
+def scratch_root() -> str:
+    """This process's directory for files that outlive one query; one
+    ``atexit`` removes it."""
+    root = tempfile.mkdtemp(prefix="spark_graft_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def stage_slices(
+    stage: str, slices: Sequence[tuple[str, DataFrame]]
+) -> T.StructType:
+    """Write each ``(name, df)`` as the one parquet file ``stage/name``,
+    all slices concurrently. Mtimes continue the staging schedule after
+    the files already in ``stage``, so :func:`slice_stream` delivers the
+    slices one per micro-batch in the given order. Returns the slices'
+    schema."""
+    os.makedirs(stage, exist_ok=True)
+    first = sum(not n.startswith(("_", ".")) for n in os.listdir(stage))
+
+    def write(i: int, name: str, df: DataFrame) -> None:
+        tmp = os.path.join(stage, f"_{name}")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
+        dst = os.path.join(stage, name)
+        os.replace(os.path.join(tmp, part), dst)
+        shutil.rmtree(tmp)
+        mtime = _SLICE_MTIME0 + _SLICE_MTIME_STEP * (first + i)
+        os.utime(dst, (mtime, mtime))
+
+    spark = slices[0][1].sparkSession
+    with ThreadPoolExecutor(max_workers=len(slices)) as pool:
+        for f in [
+            pool.submit(inheritable_thread_target(spark)(write), i, name, df)
+            for i, (name, df) in enumerate(slices)
+        ]:
+            f.result()
+    return slices[0][1].schema
+
+
+def slice_stream(
+    spark: SparkSession, stage: str, schema: T.StructType
+) -> DataFrame:
+    """The files staged in ``stage`` as a parquet file-source stream, one
+    file per micro-batch in staging order."""
+    return (
+        spark.readStream.format("parquet")
+        .schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .load(stage)
+    )
+
+
+def run_batches(
+    stream_df: DataFrame,
+    checkpoint: str,
+    on_batch: Callable[[DataFrame, int], None],
+    crash_injected: bool = False,
+) -> None:
+    """Run ``stream_df`` over all available input into ``on_batch(
+    batch_df, batch_id)``. A later call with the same ``checkpoint``
+    restarts where this one committed. The query's failure is swallowed
+    only when the caller has injected a crash into ``on_batch``."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    q = (
+        stream_df.writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+    except StreamingQueryException:
+        if not crash_injected:
+            raise
 
 
 def stream_from_parquet(
@@ -193,7 +290,8 @@ def run_to_completion(
     sink cannot express complete-mode re-emission, and complete-mode
     results are bounded aggregates by construction. The checkpoint
     directory is removed once the query terminates; the sink directory
-    at interpreter exit, since the returned frame reads it lazily."""
+    lives under :func:`scratch_root`, since the returned frame reads it
+    lazily."""
     if output_mode == "append":
         # sink-width repartition (guide §6 — coalesce on write): without
         # it every state-store partition writes its own tiny file (33
@@ -207,25 +305,26 @@ def run_to_completion(
         k = max(
             1, stream_df.sparkSession.sparkContext.defaultParallelism // 8
         )
-        out_dir = tempfile.mkdtemp(prefix="stream_sink_")
-        ck_dir = tempfile.mkdtemp(prefix="stream_sink_ck_")
-        try:
-            q = (
-                stream_df.repartition(k)
-                .writeStream.format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ck_dir)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        except BaseException:
-            shutil.rmtree(out_dir, ignore_errors=True)
-            raise
-        finally:
-            shutil.rmtree(ck_dir, ignore_errors=True)
-        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+        out_dir = os.path.join(
+            scratch_root(), f"stream_sink_{uuid.uuid4().hex[:12]}"
+        )
+        with tempfile.TemporaryDirectory(
+            prefix="stream_sink_ck_", ignore_cleanup_errors=True
+        ) as ck_dir:
+            try:
+                q = (
+                    stream_df.repartition(k)
+                    .writeStream.format("parquet")
+                    .option("path", out_dir)
+                    .option("checkpointLocation", ck_dir)
+                    .outputMode("append")
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
+            except BaseException:
+                shutil.rmtree(out_dir, ignore_errors=True)
+                raise
         return (
             stream_df.sparkSession.read.schema(stream_df.schema)
             .parquet(out_dir)
@@ -313,31 +412,14 @@ def stream_to_csv_sink(
     return result["path"]
 
 
-def stream_upsert_state(
-    stream_df: DataFrame,
+def upsert_batches(
     state_dir: str,
-    checkpoint_dir: str,
     key_col: str = "user_id",
     ts_col: str = "ts",
     tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Maintain a keyed state table under ``state_dir`` from a change
-    stream via ``foreachBatch`` — the streaming half of the CDC surface
-    (operators/cdc.py is the batch half).
-
-    Each micro-batch is reduced to its newest row per key, merged with
-    the on-disk state keeping the greater ``(ts, tiebreak)`` winner —
-    deliberately ORDER-INSENSITIVE across batches, because a file-source
-    stream gives no cross-file time ordering; last-writer-wins by event
-    time (not arrival) is the only correct merge under that contract.
-    Deletions must therefore be TOMBSTONES (rows that win but are
-    filtered at read time), exactly as real CDC log-compaction does:
-    hard-deleting would let an older late-arriving event resurrect the
-    key. Returns the final state as a batch DataFrame (tombstones
-    included; callers filter).
-    """
-    import uuid as _uuid
-
+) -> Callable[[DataFrame, int], None]:
+    """The ``foreachBatch`` callback of :func:`stream_upsert_state`: fold
+    one micro-batch into the keyed state table under ``state_dir``."""
     from pyspark.sql import Window as W
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -365,14 +447,37 @@ def stream_upsert_state(
         winner = winner.localCheckpoint(eager=True)
         winner.write.mode("overwrite").parquet(state_dir)
 
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return merge_batch
+
+
+def stream_upsert_state(
+    stream_df: DataFrame,
+    state_dir: str,
+    checkpoint_dir: str,
+    key_col: str = "user_id",
+    ts_col: str = "ts",
+    tiebreak_col: str = "event_id",
+) -> DataFrame:
+    """Maintain a keyed state table under ``state_dir`` from a change
+    stream via ``foreachBatch`` — the streaming half of the CDC surface
+    (operators/cdc.py is the batch half).
+
+    Each micro-batch is reduced to its newest row per key, merged with
+    the on-disk state keeping the greater ``(ts, tiebreak)`` winner —
+    deliberately ORDER-INSENSITIVE across batches, because a file-source
+    stream gives no cross-file time ordering; last-writer-wins by event
+    time (not arrival) is the only correct merge under that contract.
+    Deletions must therefore be TOMBSTONES (rows that win but are
+    filtered at read time), exactly as real CDC log-compaction does:
+    hard-deleting would let an older late-arriving event resurrect the
+    key. Returns the final state as a batch DataFrame (tombstones
+    included; callers filter).
+    """
+    run_batches(
+        stream_df,
+        checkpoint_dir,
+        upsert_batches(state_dir, key_col, ts_col, tiebreak_col),
     )
-    q.awaitTermination()
     return stream_df.sparkSession.read.parquet(state_dir)
 
 

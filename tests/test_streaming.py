@@ -61,7 +61,11 @@ def test_dedup_within_watermark(spark, tmp_path):
 
 
 def test_append_run_removes_its_checkpoint_dir(spark, tmp_path, monkeypatch):
+    import os
     import tempfile
+    from urllib.parse import urlparse
+
+    from dataintegration_csvprovider_spark.streaming.events import scratch_root
 
     _, stream = _staged_stream(spark, tmp_path)
     temp = tmp_path / "tmp"
@@ -71,8 +75,14 @@ def test_append_run_removes_its_checkpoint_dir(spark, tmp_path, monkeypatch):
         dedup_within_watermark(stream, keys=("user_id", "event_type")), "append"
     )
     assert not list(temp.glob("stream_sink_ck_*"))
-    # the sink dir stays until exit: the returned frame reads it lazily
-    assert [p.name.startswith("stream_sink_") for p in temp.iterdir()] == [True]
+    # the sink dir stays until exit under the process scratch root: the
+    # returned frame reads it lazily
+    assert set(os.listdir(temp)) <= {os.path.basename(scratch_root())}
+    files = out.inputFiles()
+    assert files and all(
+        urlparse(f).path.startswith(scratch_root() + "/stream_sink_")
+        for f in files
+    )
     assert out.count() > 0
 
 
