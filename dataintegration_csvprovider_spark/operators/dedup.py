@@ -21,7 +21,8 @@ Scale notes: every pairwise step is an equi-join on a hash bucket, so it
 shuffles on bucket keys and broadcasts nothing; the only iterative stage
 (connected components, operators/components.py) contracts the pair graph
 with alternating large-star/small-star rounds under per-round lineage
-truncation. Skewed buckets (a shingle appearing in every doc)
+truncation, unless the pair ids are integral and few enough for its
+driver union-find. Skewed buckets (a shingle appearing in every doc)
 are capped via a frequency filter before the join.
 """
 
@@ -323,14 +324,15 @@ def connected_components(
     edges: DataFrame, max_iterations: int = 25
 ) -> DataFrame:
     """Undirected edges (a, b) -> (id, component) where component = min
-    id reachable. Thin adapter over the engine's single graph-contraction
-    primitive — alternating large-star/small-star
-    (operators/components.py), O(log n) rounds with per-round lineage
-    truncation — keeping this module's historical (id, component)
-    schema.
+    id reachable. Thin adapter over the engine's one components operator
+    (operators/components.py), keeping this module's historical (id,
+    component) schema: integral pair ids up to ``DRIVER_MAX_EDGES`` edges
+    are labeled by a union-find on the driver, other edge sets by the
+    alternating large-star/small-star contraction (O(log n) rounds with
+    per-round lineage truncation, at most ``max_iterations`` of them).
 
-    Edge-case contract: self-loops (a, a) are canonicalized away by the
-    contraction, so a node appearing *only* in self-loops is absent from
+    Edge-case contract: self-loops (a, a) are canonicalized away on both
+    routes, so a node appearing *only* in self-loops is absent from
     the output (the pre-round-2 label-propagation version emitted it as
     its own singleton). Benign for this module's pair emitters, which
     never produce a == b; union in (id, id) singletons yourself if you

@@ -15,6 +15,7 @@ import hashlib
 import random
 import re
 import threading
+import uuid
 
 import py4j.clientserver
 from hypothesis import given, settings, strategies as st
@@ -177,3 +178,24 @@ def test_dedup_py4j_budget(spark):
         conn.send_command = send
     assert pairs.count() == 20 and len(labels) == 40
     assert calls[0] <= 400, calls[0]
+
+
+def test_components_job_budget(spark):
+    """Spark jobs of ``connected_components(...).collect()`` on the 20
+    pairs of 200 docs, read through the status tracker under a job
+    group: the contraction's rounds ran 8, the driver layout runs 1 (its
+    capped Arrow collect)."""
+    df = spark.createDataFrame(_corpus(), "doc_id bigint, text string")
+    pairs = minhash_near_dup_pairs(df)
+    sc = spark.sparkContext
+    group = f"components-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        labels = connected_components(pairs, src="a", dst="b").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(labels) == 40
+    assert len(jobs) <= 2, len(jobs)

@@ -8,6 +8,7 @@ import math
 
 import pytest
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import DataFrame
 
 from dataintegration_csvprovider_spark.operators.dedup import (
     minhash_near_dup_pairs,
@@ -159,26 +160,8 @@ def test_minhash_estimates_jaccard(spark):
             assert abs(est[pair] - j) <= 0.25, (pair, j, est[pair])
 
 
-@given(
-    st.lists(
-        st.tuples(st.integers(0, 24), st.integers(0, 24)),
-        min_size=0,
-        max_size=40,
-    )
-)
-@settings(max_examples=20, deadline=None)
-def test_connected_components_matches_union_find(spark_prop, edges):
-    # large-star/small-star contraction vs a driver-side union-find
-    from dataintegration_csvprovider_spark.operators.dedup import (
-        connected_components,
-    )
-
-    edges = [(a, b) for a, b in edges if a != b]
-    if not edges:
-        return
-    df = spark_prop.createDataFrame(edges, "a bigint, b bigint")
-    got = {r.id: r.component for r in connected_components(df).collect()}
-
+def _union_find(edges) -> dict:
+    """Min-id component of every node of the non-loop, non-NULL edges."""
     parent: dict[int, int] = {}
 
     def find(x):
@@ -188,16 +171,89 @@ def test_connected_components_matches_union_find(spark_prop, edges):
             x = parent[x]
         return x
 
-    def union(x, y):
-        rx, ry = find(x), find(y)
-        if rx != ry:
-            parent[max(rx, ry)] = min(rx, ry)
-
     for a, b in edges:
-        union(a, b)
-    expected = {n: find(n) for n in parent}
-    # normalize: component label = min member, both sides
-    assert got == expected
+        if a is not None and b is not None and a != b:
+            rx, ry = find(a), find(b)
+            if rx != ry:
+                parent[max(rx, ry)] = min(rx, ry)
+    return {n: find(n) for n in parent}
+
+
+def _both_routes(edges: DataFrame, src: str, dst: str):
+    """``connected_components`` on its own route and with the driver box
+    at 0, which forces the contraction on every non-empty edge list.
+    Returns both label frames and whether each ran the contraction."""
+    from dataintegration_csvprovider_spark.operators import components
+
+    runs = []
+    contract = components.connected_components_stats
+
+    def spy(*args, **kwargs):
+        runs[-1] = True
+        return contract(*args, **kwargs)
+
+    out = []
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(components, "connected_components_stats", spy)
+        for box in (components.DRIVER_MAX_EDGES, 0):
+            mp.setattr(components, "DRIVER_MAX_EDGES", box)
+            runs.append(False)
+            out.append(components.connected_components(edges, src, dst))
+    return out, runs
+
+
+_end = st.one_of(st.none(), st.integers(0, 24))
+_INT_TYPES = ["smallint", "int", "bigint"]  # narrowest first
+
+
+@st.composite
+def _edge_frames(draw):
+    """Edges with NULL ends and self-loops, plus duplicate and reversed
+    copies of drawn edges, in integral columns under drawn names."""
+    edges = draw(
+        st.lists(
+            st.one_of(st.tuples(_end, _end), st.integers(0, 24).map(lambda n: (n, n))),
+            max_size=40,
+        )
+    )
+    if edges:
+        copies = draw(st.lists(st.tuples(st.sampled_from(edges), st.booleans()), max_size=10))
+        edges += [(b, a) if flip else (a, b) for (a, b), flip in copies]
+    names = draw(st.sampled_from([("src", "dst"), ("a", "b"), ("from node", "to.node")]))
+    types = draw(st.tuples(st.sampled_from(_INT_TYPES), st.sampled_from(_INT_TYPES)))
+    return edges, names, types
+
+
+@given(_edge_frames())
+@settings(max_examples=20, deadline=None)
+def test_connected_components_matches_union_find(spark_prop, frame):
+    """Both routes of ``connected_components`` (the driver union-find and
+    the large-star/small-star contraction) against a Python union-find,
+    with equal output schemas."""
+    edges, (src, dst), (t_src, t_dst) = frame
+    df = spark_prop.createDataFrame(edges, f"`{src}` {t_src}, `{dst}` {t_dst}")
+    (driver, contracted), ran_contraction = _both_routes(df, src, dst)
+    assert ran_contraction == [False, bool(edges)]
+    id_type = max(t_src, t_dst, key=_INT_TYPES.index)
+    schema = [(f.name, f.dataType.simpleString()) for f in driver.schema]
+    assert schema == [("node", id_type), ("component", id_type)]
+    assert [(f.name, f.dataType.simpleString()) for f in contracted.schema] == schema
+    expected = _union_find(edges)
+    for labels in (driver, contracted):
+        got = {r.node: r.component for r in labels.collect()}
+        assert got == expected
+
+
+def test_connected_components_string_ids_contract(spark):
+    """String ids take the contraction, and label with the least string."""
+    df = spark.createDataFrame(
+        [("b", "a"), ("c", "b"), ("y", "x"), ("z", "z")], "src string, dst string"
+    )
+    (default, _), ran_contraction = _both_routes(df, "src", "dst")
+    assert ran_contraction == [True, True]
+    assert [f.dataType.simpleString() for f in default.schema] == ["string", "string"]
+    got = {r.node: r.component for r in default.collect()}
+    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
 @given(

@@ -62,15 +62,13 @@ def test_arrow_score_matches_sql_fold(spark):
         assert got[vid] == (acc, acc > 0.0)
 
 
-def test_doc_chunking_short_and_exact_docs(spark):
+def test_doc_chunking_short_and_exact_docs(spark, tmp_path):
     # windows: 200 chars, stride 150; a doc shorter than one window gets
     # exactly one chunk; a doc of exactly window+stride length gets two
     from dataintegration_csvprovider_spark.queries import all_queries
 
     fn = all_queries()["q_doc_chunking"].fn
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="chunk_docs_")
+    d = str(tmp_path)
     spark.createDataFrame(
         [
             (1, "x" * 30, "en", "s", 30),
