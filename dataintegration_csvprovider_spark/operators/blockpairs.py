@@ -44,6 +44,7 @@ from typing import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -127,6 +128,16 @@ def sweep(
             yield frame
 
 
+def _tasks_frame(spark: SparkSession, tasks: list[tuple[int, int]]) -> DataFrame:
+    """The block pairs ``tasks`` as a ``(bi int, bj int)`` frame, built
+    from an Arrow table: one from a list of rows paid a Python-worker
+    round trip when collected."""
+    bi, bj = zip(*tasks)
+    return spark.createDataFrame(
+        pa.table({"bi": pa.array(bi, pa.int32()), "bj": pa.array(bj, pa.int32())})
+    )
+
+
 def _schema(id_type: str, value_col: str | None) -> str:
     value = f", {value_col} double" if value_col else ""
     return f"a {id_type}, b {id_type}{value}"
@@ -160,7 +171,7 @@ def driver_block_pairs(
             )
 
     par = spark.sparkContext.defaultParallelism
-    tasks_df = spark.createDataFrame(tasks, "bi int, bj int").repartition(
+    tasks_df = _tasks_frame(spark, tasks).repartition(
         min(len(tasks), par * 2)
     )
     return tasks_df.mapInPandas(score, _schema(id_type, value_col))
@@ -210,7 +221,7 @@ def executor_block_pairs(
         .applyInPandas(pack, "bi int, m array<double>")
     )
     joined = (
-        spark.createDataFrame(tasks, "bi int, bj int")
+        _tasks_frame(spark, tasks)
         .join(blocks.withColumnRenamed("m", "ma"), "bi")
         .join(
             blocks.withColumnRenamed("m", "mb").withColumnRenamed("bi", "bj"),

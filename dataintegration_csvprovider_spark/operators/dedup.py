@@ -167,18 +167,29 @@ def minhash_signatures(
     )
 
 
+def _shingle_hash_sql(g: str, base_hash: str) -> str:
+    """The 31-bit hash of the shingle ``g`` as Spark SQL text (see
+    :func:`minhash_signatures` for the two ``base_hash`` families)."""
+    if base_hash == "xxhash64":
+        return f"xxhash64({g}) & 2147483647L"
+    if base_hash == "md5":
+        return (
+            f"cast(pmod(cast(conv(substring(md5({g}), 1, 16), 16, 10) "
+            "as decimal(20,0)), 2147483647) as bigint)"
+        )
+    raise ValueError(f"unknown base_hash: {base_hash!r}")
+
+
+def _permutation_sql(h: str, a: str, b: str) -> str:
+    """Permutation (``a``, ``b``) of the 31-bit hash ``h`` as Spark SQL
+    text; the signature keeps its minimum over the doc's shingles."""
+    return f"pmod({h} * {a} + {b}, 2147483647L)"
+
+
 def _minhash_sql(grams: str, num_hashes: int, base_hash: str) -> str:
     """The MinHash signature of the shingle array ``grams`` as Spark SQL
     text (see :func:`minhash_signatures`)."""
-    if base_hash == "xxhash64":
-        h31 = "xxhash64(g) & 2147483647L"
-    elif base_hash == "md5":
-        h31 = (
-            "cast(pmod(cast(conv(substring(md5(g), 1, 16), 16, 10) "
-            "as decimal(20,0)), 2147483647) as bigint)"
-        )
-    else:
-        raise ValueError(f"unknown base_hash: {base_hash!r}")
+    h31 = _shingle_hash_sql("g", base_hash)
     mix = ", ".join(
         "named_struct('a', {}, 'b', {})".format(*minhash_mix(i))
         for i in range(num_hashes)
@@ -187,7 +198,7 @@ def _minhash_sql(grams: str, num_hashes: int, base_hash: str) -> str:
         f"aggregate(transform({grams}, g -> {h31}), "
         f"array_repeat(9223372036854775807L, {num_hashes}), "
         f"(acc, h) -> zip_with(acc, array({mix}), "
-        "(cur, s) -> least(cur, pmod(h * s.a + s.b, 2147483647L))))"
+        f"(cur, s) -> least(cur, {_permutation_sql('h', 's.a', 's.b')})))"
     )
 
 
@@ -276,21 +287,72 @@ def _signature_table(
     base_hash: str = "xxhash64",
 ) -> DataFrame:
     """(``id_col``, signature) of every doc with at least one shingle,
-    computed once: an eager ``localCheckpoint``. The table feeds the
-    band join and both verify sides; persisted instead, AQE submitted
-    those exchanges as concurrent jobs that queued on the same blocks,
-    and every stage re-planned the fold."""
-    return (
-        minhash_signatures(
-            _with_content(df, text_col, min_words=shingle_size),
-            text_col,
-            id_col,
-            num_hashes,
-            shingle_size,
-            base_hash,
+    one row per input row (a repeated or NULL id keeps a signature per
+    row), computed once: an eager ``localCheckpoint``. The table feeds
+    the band join and both verify sides; persisted instead, AQE
+    submitted those exchanges as concurrent jobs that queued on the same
+    blocks, and every stage re-planned the signatures.
+
+    The plan (:func:`_signature_plan`) uses Spark's code-generated
+    operators, not the lambda fold of :func:`minhash_signatures`: each
+    row gets a row key, the rows are hash-partitioned on it (the one
+    exchange, in place of ``spread``'s round-robin one), the shingles
+    are exploded and hashed, and an aggregate grouped on (id, row key)
+    takes the ``num_hashes`` ``min`` permutations into one array. The
+    grouping keys hold the partition key, so the partial and final
+    aggregates run in the exchange's stage. Higher-order functions run
+    interpreted, and the fold made one lambda call per shingle and seed,
+    about 11.5M on perfbench's 3,120-doc corpus; there the table took
+    0.66 s against the fold's 0.85-0.92 s (median of 7, ``local[4]`` on
+    a shared 4-vCPU host).
+
+    Scale: the aggregate's hash map holds one buffer of ``num_hashes``
+    longs per doc of a task, about 0.6 KB at 64, where the fold held
+    nothing beyond its row; under memory pressure Spark falls back to a
+    sort-based aggregate, which bounds it. :func:`minhash_signatures`
+    and so :func:`stream_near_dup_flags` keep the fold: it is one narrow
+    projection, where on a stream a grouped aggregate would need state
+    across micro-batches."""
+    return _signature_plan(
+        df, text_col, id_col, num_hashes, shingle_size, base_hash
+    ).localCheckpoint(eager=True)
+
+
+def _signature_plan(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    shingle_size: int,
+    base_hash: str,
+) -> DataFrame:
+    """The plan behind :func:`_signature_table`."""
+    h31 = _shingle_hash_sql("__g", base_hash)
+    mins = ", ".join(
+        "min({})".format(_permutation_sql("__h", *map(str, minhash_mix(i))))
+        for i in range(num_hashes)
+    )
+    # the row key gets its own projection: beside the explode it would
+    # be evaluated once per shingle
+    rows = _with_content(df, text_col, min_words=shingle_size).selectExpr(
+        sql_ident(id_col),
+        sql_ident(text_col),
+        "monotonically_increasing_id() AS __row_key",
+    )
+    par = df.sparkSession.sparkContext.defaultParallelism
+    hashes = (
+        rows.repartition(par, "__row_key")
+        .selectExpr(
+            sql_ident(id_col),
+            "__row_key",
+            f"explode({word_shingles_sql(sql_ident(text_col), shingle_size)}) AS __g",
         )
+        .selectExpr(sql_ident(id_col), "__row_key", f"{h31} AS __h")
+    )
+    return (
+        hashes.groupBy(id_col, "__row_key")
+        .agg(F.expr(f"array({mins})").alias("signature"))
         .select(id_col, "signature")
-        .localCheckpoint(eager=True)
     )
 
 

@@ -2,11 +2,12 @@
 SQL text, against independent expectations.
 
 ``word_shingles_sql`` is checked against its Column twin
-``word_shingles``. The signatures are checked against an expectation
-computed outside the code under test: shingles split in Python by
-Spark's own rules, hashed by Spark's built-in ``xxhash64`` (or by
-``hashlib`` for ``base_hash="md5"``) and folded into the 64 minima in
-Python from :func:`minhash_mix`.
+``word_shingles``. The signatures, both the public row-wise fold and
+the grouped batch table behind the pair path, are checked against an
+expectation computed outside the code under test: shingles split in
+Python by Spark's own rules, hashed by Spark's built-in ``xxhash64``
+(or by ``hashlib`` for ``base_hash="md5"``) and folded into the 64
+minima in Python from :func:`minhash_mix`.
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ from dataintegration_csvprovider_spark.operators.components import (
     connected_components,
 )
 from dataintegration_csvprovider_spark.operators.dedup import (
+    _signature_plan,
+    _signature_table,
     minhash_mix,
     minhash_near_dup_pairs,
     minhash_signatures,
@@ -43,14 +46,11 @@ _JAVA_SPACE = re.compile("[ \t\n\x0b\f\r]+")
 # astral code point do not
 _fragments = ["a", "b", "a b", "äß", "日本", "\U0001F600", " ", "  ", "\t",
               "\n", "\r\n", "\x0b", "\f", "\u00a0", "\u2003"]
-_docs = st.lists(
-    st.one_of(
-        st.none(),
-        st.lists(st.sampled_from(_fragments), max_size=14).map("".join),
-    ),
-    min_size=1,
-    max_size=12,
+_doc = st.one_of(
+    st.none(),
+    st.lists(st.sampled_from(_fragments), max_size=14).map("".join),
 )
+_docs = st.lists(_doc, min_size=1, max_size=12)
 
 
 def expected_shingles(text: str | None, k: int) -> list[str] | None:
@@ -79,6 +79,16 @@ def _md5_31(gram: str) -> int:
     return int(hashlib.md5(gram.encode("utf-8")).hexdigest()[:16], 16) % P31
 
 
+def _xxhash_31(spark, grams) -> dict[str, int]:
+    """31-bit ``xxhash64`` of each shingle, by Spark's built-in."""
+    if not grams:
+        return {}
+    rows = spark.createDataFrame([(g,) for g in grams], "g string").selectExpr(
+        "g", "xxhash64(g) & 2147483647L AS h"
+    )
+    return {r["g"]: r["h"] for r in rows.collect()}
+
+
 @settings(max_examples=25, deadline=None)
 @given(texts=_docs, k=st.sampled_from([1, 2, 3]))
 def test_word_shingles_sql_matches_column(spark_prop, texts, k):
@@ -97,24 +107,74 @@ def test_signatures_match_python_oracle(spark_prop, texts):
     docs = [(i, t) for i, t in enumerate(texts)]
     df = spark_prop.createDataFrame(docs, "doc_id bigint, text string")
     grams = {i: expected_shingles(t, 3) for i, t in docs}
-    rows = [(i, g) for i, gs in grams.items() if gs for g in gs]
-    xx = {}
-    if rows:
-        hashed = spark_prop.createDataFrame(rows, "i bigint, g string").selectExpr(
-            "i", "g", "xxhash64(g) & 2147483647L AS h"
-        )
-        xx = {(r["i"], r["g"]): r["h"] for r in hashed.collect()}
-    for base_hash, h31 in (
-        ("xxhash64", lambda i, g: xx[(i, g)]),
-        ("md5", lambda i, g: _md5_31(g)),
-    ):
+    xx = _xxhash_31(spark_prop, {g for gs in grams.values() if gs for g in gs})
+    for base_hash, h31 in (("xxhash64", xx.__getitem__), ("md5", _md5_31)):
         got = {
             r["doc_id"]: (r["text"], r["signature"])
             for r in minhash_signatures(df, base_hash=base_hash).collect()
         }
         for i, t in docs:
-            hashes = None if grams[i] is None else [h31(i, g) for g in grams[i]]
+            hashes = None if grams[i] is None else [h31(g) for g in grams[i]]
             assert got[i] == (t, expected_signature(hashes)), (base_hash, t)
+
+
+_words = st.sampled_from(["a", "b", "äß", "日本", "a\u00a0b"])
+_gaps = st.sampled_from([" ", "  ", "\t", "\n", "\r\n", " \t "])
+#: docs of exactly three words (the shingle size) and of two, among the
+#: free-form ones
+_sized_doc = st.integers(2, 3).flatmap(
+    lambda n: st.tuples(st.lists(_words, min_size=n, max_size=n), _gaps)
+).map(lambda wg: wg[1].join(wg[0]))
+_keyed_docs = st.lists(
+    st.tuples(
+        # few distinct ids, so some repeat, and NULL
+        st.one_of(st.none(), st.integers(0, 3)),
+        st.one_of(_sized_doc, _doc),
+    ),
+    min_size=1,
+    max_size=10,
+)
+
+
+@settings(max_examples=12, deadline=None)
+@given(docs=_keyed_docs)
+def test_signature_table_matches_python_oracle(spark_prop, docs):
+    """The grouped batch table: one signature per input row with at
+    least one shingle, whatever its id (repeated or NULL), and none for a
+    doc under the shingle size."""
+    df = spark_prop.createDataFrame(docs, "doc_id bigint, text string")
+    grams = [expected_shingles(t, 3) for _, t in docs]
+    xx = _xxhash_31(spark_prop, {g for gs in grams if gs for g in gs})
+    for base_hash, h31 in (("xxhash64", xx.__getitem__), ("md5", _md5_31)):
+        got = _signature_table(df, "text", "doc_id", NUM_HASHES, 3, base_hash).collect()
+        want = [
+            (i, expected_signature([h31(g) for g in gs]))
+            for (i, _), gs in zip(docs, grams)
+            if gs
+        ]
+        assert len(got) == len(want) == sum(bool(gs) for gs in grams)
+        assert sorted(map(tuple, got), key=_null_first) == sorted(
+            want, key=_null_first
+        ), base_hash
+
+
+def _null_first(row: tuple) -> tuple:
+    return row[0] is not None, row[0] or 0, row[1]
+
+
+def test_signature_table_plan(spark):
+    """The batch table is one hash exchange feeding a grouped ``min``
+    aggregate: a second exchange or the lambda fold would undo it. The
+    shingles keep their own ``zip_with`` chain."""
+    df = spark.createDataFrame(_corpus(20), "doc_id bigint, text string")
+    for base_hash in ("xxhash64", "md5"):
+        plan = _signature_plan(
+            df, "text", "doc_id", NUM_HASHES, 3, base_hash
+        )._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == 1, plan
+        assert "HashAggregate" in plan
+        assert plan.count("zip_with") == word_shingles_sql("`text`", 3).count("zip_with")
+        assert "aggregate(" not in plan
 
 
 def _corpus(n: int = 200) -> list[tuple[int, str]]:
